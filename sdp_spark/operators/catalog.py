@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sdp_spark.functions.num import sql_dsum
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import cache_dir, cache_tag, table
 
@@ -30,22 +31,15 @@ _SEC = "1.3 catalog/ddl"
 DB = "sampledb"
 
 
-_DB_READY: set[str] = set()
-_ANALYZED: set[str] = set()
-
-
+@memo
 def ensure_sampledb(spark: SparkSession, sf_dir: str) -> str:
     """CREATE DATABASE IF NOT EXISTS sampledb at a stable /tmp location.
     Idempotent; every operator that persists catalog tables goes through
     this (the analogue of connecting to the deployed MYSQL_DATABASE).
-    Memoized per SparkContext — repeat operator calls (bench reps) skip the
-    DDL round-trip."""
-    app = spark.sparkContext.applicationId
-    if app not in _DB_READY:
-        loc = cache_dir(sf_dir, "sampledb_warehouse")
-        os.makedirs(loc, exist_ok=True)
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB} LOCATION '{loc}'")
-        _DB_READY.add(app)
+    Memoized — repeat operator calls (bench reps) skip the DDL round-trip."""
+    loc = cache_dir(sf_dir, "sampledb_warehouse")
+    os.makedirs(loc, exist_ok=True)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {DB} LOCATION '{loc}'")
     return DB
 
 
@@ -108,18 +102,20 @@ def catalog_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     _drop_table(spark, sf_dir, name)
     src.write.format("parquet").saveAsTable(tbl)
 
-    # ANALYZE TABLE (MySQL's statistics maintenance) — feeds Spark CBO the
-    # rowCount/column stats that drive join reordering at scale. Once per
-    # session: repeat invocations (bench reps) must not re-pay the stats
-    # job + driver collect.
-    key = f"{spark.sparkContext.applicationId}:{tbl}"
-    if key not in _ANALYZED:
-        spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
-        detail = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
-        if not any("Statistics" in (r.col_name or "") for r in detail):
-            raise RuntimeError(f"catalog_ddl: ANALYZE left no statistics on {tbl}")
-        _ANALYZED.add(key)
+    _analyze(spark, sf_dir, tbl)
     return spark.table(tbl)
+
+
+@memo
+def _analyze(spark: SparkSession, sf_dir: str, tbl: str) -> None:
+    """ANALYZE TABLE (MySQL's statistics maintenance) — feeds Spark CBO the
+    rowCount/column stats that drive join reordering at scale. Once per
+    session: repeat invocations (bench reps) must not re-pay the stats
+    job + driver collect."""
+    spark.sql(f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR ALL COLUMNS")
+    detail = spark.sql(f"DESCRIBE TABLE EXTENDED {tbl}").collect()
+    if not any("Statistics" in (r.col_name or "") for r in detail):
+        raise RuntimeError(f"catalog_ddl: ANALYZE left no statistics on {tbl}")
 
 
 @register(
@@ -325,7 +321,13 @@ def catalog_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _REFDB = "refdb"
-_REFDB_READY: set[str] = set()
+
+
+@memo
+def _ensure_refdb(spark: SparkSession, sf_dir: str) -> None:
+    loc = cache_dir(sf_dir, "refdb_warehouse")
+    os.makedirs(loc, exist_ok=True)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {_REFDB} LOCATION '{loc}'")
 
 
 @register(
@@ -352,12 +354,7 @@ def catalog_cross_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     the point: databases are organizational, not physical, exactly as in
     the reference engine."""
     db = ensure_sampledb(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    if app not in _REFDB_READY:
-        loc = cache_dir(sf_dir, "refdb_warehouse")
-        os.makedirs(loc, exist_ok=True)
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {_REFDB} LOCATION '{loc}'")
-        _REFDB_READY.add(app)
+    _ensure_refdb(spark, sf_dir)
     tag = _safe_tag(sf_dir)
     # customer_x_, not customer_: catalog_views owns customer_{tag} with a
     # 2-column projection — reusing it here would UNRESOLVED_COLUMN when

@@ -42,6 +42,7 @@ from sdp_spark.operators.llm import (
     _md5_hex_fold_sql,
     _shingles,
 )
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table, wide_table
 
@@ -114,29 +115,24 @@ _NGRAM_N = 8
 # consumes the gram relation from two subtrees (benchmark side + training
 # side) — uncached, the tokenize+explode+concat pipeline runs twice per
 # invocation.
-_GRAMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _GRAMS_CACHE:
-        # wide_table: the n-gram explode below is the CPU hot spot of the
-        # whole decontamination plan — see fixtures.wide_table.
-        toks = wide_table(spark, sf_dir, "documents").withColumn("t", F.split("text", " "))
-        _GRAMS_CACHE[key] = (
-            toks.filter(F.size("t") >= _NGRAM_N)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("t") - (_NGRAM_N - 1)),
-                        lambda i: F.concat_ws(" ", F.slice("t", i, _NGRAM_N)),
-                    )
-                ).alias("ngram"),
-            )
-            .cache()
+    # wide_table: the n-gram explode below is the CPU hot spot of the
+    # whole decontamination plan — see fixtures.wide_table.
+    toks = wide_table(spark, sf_dir, "documents").withColumn("t", F.split("text", " "))
+    return (
+        toks.filter(F.size("t") >= _NGRAM_N)
+        .select(
+            "doc_id",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("t") - (_NGRAM_N - 1)),
+                    lambda i: F.concat_ws(" ", F.slice("t", i, _NGRAM_N)),
+                )
+            ).alias("ngram"),
         )
-    return _GRAMS_CACHE[key]
+        .cache()
+    )
 
 
 @register(
@@ -418,11 +414,10 @@ _EMB_THRESH = 0.4
 # _cached_clusters/_collapse_dense (llm.py): identical vectors collapse to
 # one representative before bucketing, bounding the bucket self-join by
 # UNIQUE vectors on dup-dense corpora.
-_EMB_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-_EMB_COLLAPSE_DECISION: dict[tuple[str, str], bool] = {}
 _EMB_COLLAPSE_MIN_DUP_FRAC = 0.05
 
 
+@memo
 def _emb_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, ck, rep): exact-duplicate vector cluster (hash of the raw
     double array) and its min-vec_id representative. One shuffle keyed on
@@ -432,38 +427,30 @@ def _emb_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct vectors cannot silently merge into one cluster and emit a
     fabricated cos_sim=1.0 pair (the belt-and-braces the single-hash key
     lacked)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_CLUSTER_CACHE:
-        emb = _emb_normed(spark, sf_dir)
-        clusters = emb.select(
-            "vec_id",
-            F.struct(
-                F.xxhash64("dvec").alias("h1"),
-                F.xxhash64(F.lit(-7046029254386353131), "dvec").alias("h2"),
-            ).alias("ck"),
-        )
-        _EMB_CLUSTER_CACHE[key] = clusters.withColumn(
-            "rep", F.min("vec_id").over(Window.partitionBy("ck"))
-        ).cache()
-    return _EMB_CLUSTER_CACHE[key]
+    emb = _emb_normed(spark, sf_dir)
+    clusters = emb.select(
+        "vec_id",
+        F.struct(
+            F.xxhash64("dvec").alias("h1"),
+            F.xxhash64(F.lit(-7046029254386353131), "dvec").alias("h2"),
+        ).alias("ck"),
+    )
+    return clusters.withColumn(
+        "rep", F.min("vec_id").over(Window.partitionBy("ck"))
+    ).cache()
 
 
+@memo
 def _emb_collapse_dense(spark: SparkSession, sf_dir: str) -> bool:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_COLLAPSE_DECISION:
-        stats = (
-            _emb_clusters(spark, sf_dir)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("vec_id") != F.col("rep")).cast("long")).alias("dups"),
-            )
-            .first()
+    stats = (
+        _emb_clusters(spark, sf_dir)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum((F.col("vec_id") != F.col("rep")).cast("long")).alias("dups"),
         )
-        _EMB_COLLAPSE_DECISION[key] = (
-            stats["n"] > 0
-            and stats["dups"] / stats["n"] >= _EMB_COLLAPSE_MIN_DUP_FRAC
-        )
-    return _EMB_COLLAPSE_DECISION[key]
+        .first()
+    )
+    return stats["n"] > 0 and stats["dups"] / stats["n"] >= _EMB_COLLAPSE_MIN_DUP_FRAC
 
 
 def _embed_lsh_oracle_sql() -> str:
@@ -1269,9 +1256,7 @@ _PCA_NCOMP = 4
 
 # (mean, components, explained_variance_ratio) memoized per (app, sf_dir):
 # the fit is one distributed pass; projection and tests consume it.
-_PCA_CACHE: dict = {}
-
-
+@memo
 def _pca_fit(spark: SparkSession, sf_dir: str):
     """One-pass distributed PCA fit: per-partition partial (n, sum(x),
     X^T X) via mapInPandas — each partition ships ONE (1 + dim + dim^2)
@@ -1281,10 +1266,6 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
     Sign convention: each component's largest-|coordinate| entry is made
     positive, so the fit is fully deterministic."""
     import numpy as np
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PCA_CACHE:
-        return _PCA_CACHE[key]
 
     emb = table(spark, sf_dir, "embeddings").select("embedding")
 
@@ -1321,8 +1302,7 @@ def _pca_fit(spark: SparkSession, sf_dir: str):
         if comps[i, j] < 0:
             comps[i] = -comps[i]
     evr = (evals[order] / evals.sum()).tolist()
-    _PCA_CACHE[key] = (mean, comps, evr)
-    return _PCA_CACHE[key]
+    return mean, comps, evr
 
 
 @register("llm_embed_pca", oracle=None, section=_SEC)

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sdp_spark.functions.num import DEC, dround
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table
 
@@ -41,19 +42,12 @@ _FT_IN = "('" + "', '".join(_FT_TERMS) + "')"
 # Matched-term postings (doc_id, token, tf), cached per (app, sf_dir): tf
 # and df both consume it, so the corpus is tokenized ONCE, not once per
 # subtree (at 100 TB each uncached subtree is a full corpus explode).
-_TF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TF_CACHE:
-        d = table(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
-        tok = d.select("doc_id", F.explode("toks").alias("token"))
-        matched = tok.filter(F.col("token").isin(*_FT_TERMS))
-        _TF_CACHE[key] = (
-            matched.groupBy("doc_id", "token").agg(F.count("*").alias("tf")).cache()
-        )
-    return _TF_CACHE[key]
+    d = table(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
+    tok = d.select("doc_id", F.explode("toks").alias("token"))
+    matched = tok.filter(F.col("token").isin(*_FT_TERMS))
+    return matched.groupBy("doc_id", "token").agg(F.count("*").alias("tf")).cache()
 
 
 # Query expansion's postings strategy (r9 VERDICT #7, measured in
@@ -65,7 +59,7 @@ def _cached_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bench are run-once-per-key, so the operator ships the cold-optimal
 # plan: ONE fused full-vocabulary harvest pass (pool ftf + corpus df in
 # a single grouped aggregation) instead of the r9 cand -> canddf chain,
-# with the tiny filtered tf postings still session-cached (_TF_CACHE).
+# with the tiny filtered tf postings still session-cached (_cached_tf).
 # A repeat-query deployment adds .cache() to the harvest lineage — one
 # line, hash-identical.
 

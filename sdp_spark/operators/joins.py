@@ -21,13 +21,13 @@ Scale notes:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sdp_spark.functions.num import dround, dsum, sql_dsum
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import cache_dir, table
 
@@ -802,8 +802,6 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 conf.set(k, v)
 
 
-_DPP_CACHE: dict[str, str] = {}
-
 # Staging spec for the DPP fixture below: fold the projected columns and the
 # partition key into the dir name (same policy as scans._converted_dir, per
 # ADVICE r5/r6) so (a) a fresh driver process REUSES the on-disk copy instead
@@ -815,29 +813,29 @@ _DPP_SPEC = (
 )
 
 
-def _month_parted_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lineitem partitioned hive-style by ship month (cached per sf_dir,
-    on-disk `_SUCCESS`-guarded so fresh processes reuse the staged copy)."""
+@memo
+def _month_parted_lineitem(spark: SparkSession, sf_dir: str) -> str:
+    """Path of lineitem partitioned hive-style by ship month (staged once
+    per session and data version, on-disk `_SUCCESS`-guarded so fresh
+    processes reuse the staged copy)."""
     import hashlib
 
     digest = hashlib.sha256(repr(_DPP_SPEC).encode()).hexdigest()[:8]
-    if sf_dir not in _DPP_CACHE:
-        out = cache_dir(sf_dir, f"lineitem_by_month_{digest}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            (
-                table(spark, sf_dir, "lineitem")
-                .select(
-                    "l_orderkey",
-                    "l_extendedprice",
-                    "l_discount",
-                    F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
-                )
-                .write.mode("overwrite")
-                .partitionBy("ship_month")
-                .parquet(out)
+    out = cache_dir(sf_dir, f"lineitem_by_month_{digest}")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        (
+            table(spark, sf_dir, "lineitem")
+            .select(
+                "l_orderkey",
+                "l_extendedprice",
+                "l_discount",
+                F.date_format("l_shipdate", "yyyy-MM").alias("ship_month"),
             )
-        _DPP_CACHE[sf_dir] = out
-    return spark.read.parquet(_DPP_CACHE[sf_dir])
+            .write.mode("overwrite")
+            .partitionBy("ship_month")
+            .parquet(out)
+        )
+    return out
 
 
 @register(
@@ -872,7 +870,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py. At 100 TB this is THE mechanism that turns a
     quarter-filtered year-partitioned star join from a full scan into
     reading 3 months of files."""
-    fact = _month_parted_lineitem(spark, sf_dir)
+    fact = spark.read.parquet(_month_parted_lineitem(spark, sf_dir))
     dim = (
         table(spark, sf_dir, "orders")
         .select(

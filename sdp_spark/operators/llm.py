@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from sdp_spark.functions.num import DEC, KNUTH, KNUTH_MOD, dround, sql_dround
+from sdp_spark.memo import memo, release, scratch
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table, wide_table
 
@@ -45,9 +46,7 @@ def _docs_tokens(spark: SparkSession, sf_dir: str, wide: bool = False) -> DataFr
     return t(spark, sf_dir, "documents").withColumn("toks", F.split("text", " "))
 
 
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _emb_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings with double-cast vector + L2 norm — the shared preamble of
     every similarity/dedup consumer (dot-product math wants doubles; the
@@ -55,35 +54,24 @@ def _emb_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same reason as _docs_tokens: per-row O(dim) arithmetic. Memoized
     cached per (app, sf): the norm fold is an INTERPRETED higher-order
     expression, so every consumer re-deriving it pays the eval again —
-    one cached materialization serves kmeans/semdedup/ANN/dedup_embed
-    (released by sdp_spark.unpersist_all)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_CACHE:
-        emb = wide_table(spark, sf_dir, "embeddings").withColumn(
-            "dvec", F.col("embedding").cast("array<double>")
-        )
-        _EMB_CACHE[key] = emb.withColumn(
-            "norm",
-            F.sqrt(
-                F.aggregate(F.transform("dvec", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
-            ),
-        ).cache()
-    return _EMB_CACHE[key]
+    one cached materialization serves kmeans/semdedup/ANN/dedup_embed."""
+    emb = wide_table(spark, sf_dir, "embeddings").withColumn(
+        "dvec", F.col("embedding").cast("array<double>")
+    )
+    return emb.withColumn(
+        "norm",
+        F.sqrt(
+            F.aggregate(F.transform("dvec", lambda x: x * x), F.lit(0.0), lambda a, x: a + x)
+        ),
+    ).cache()
 
 
-# Row count of the embeddings frame, memoized beside _EMB_CACHE. A count is
-# a property of the DATA (valid across cache eviction/rebuild), so it is not
-# registered in unpersist_all; it exists so occupancy/geometry decisions
-# (serve-side coalesce below, the sqrt-N IVF cell count) pay ONE cheap job
-# per session instead of one per invocation.
-_EMB_N: dict[tuple[str, str], int] = {}
-
-
+@memo
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EMB_N:
-        _EMB_N[key] = _emb_normed(spark, sf_dir).count()
-    return _EMB_N[key]
+    """Row count of the embeddings frame, memoized so occupancy/geometry
+    decisions (serve-side coalesce below, the sqrt-N IVF cell count) pay
+    ONE cheap job per session instead of one per invocation."""
+    return _emb_normed(spark, sf_dir).count()
 
 
 # Minimum candidate rows per task for broadcast-probe SERVE keys (each row
@@ -95,36 +83,28 @@ def _emb_count(spark: SparkSession, sf_dir: str) -> int:
 _SERVE_MIN_ROWS = 512
 
 
-# Memoized cached DataFrames keyed by (spark app, sf_dir): repeated operator
+# Memoized cached DataFrames (sdp_spark.memo): repeated operator
 # invocations in one session reuse ONE cached lineage instead of stacking a
 # fresh cache per call (storage-memory leak otherwise).
-_SH_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SH_CACHE:
-        _SH_CACHE[key] = _shingles(_docs_tokens(spark, sf_dir, wide=True)).cache()
-    return _SH_CACHE[key]
+    return _shingles(_docs_tokens(spark, sf_dir, wide=True)).cache()
 
 
+@memo
 def _cached_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures + shingle counts, cached once per (app, sf_dir):
     the final plan consumes this from four subtrees (band self-join sides +
     two size joins) — uncached, the 16-permutation aggregation recomputes
     per subtree."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SIG_CACHE:
-        sh = _cached_shingles(spark, sf_dir)
-        _SIG_CACHE[key] = sh.groupBy("doc_id").agg(
-            *[
-                F.min(F.xxhash64(F.lit(p), F.col("shingle"))).alias(f"h{p}")
-                for p in range(_NUM_PERM)
-            ],
-            F.count("*").alias("n_sh"),
-        ).cache()
-    return _SIG_CACHE[key]
+    sh = _cached_shingles(spark, sf_dir)
+    return sh.groupBy("doc_id").agg(
+        *[
+            F.min(F.xxhash64(F.lit(p), F.col("shingle"))).alias(f"h{p}")
+            for p in range(_NUM_PERM)
+        ],
+        F.count("*").alias("n_sh"),
+    ).cache()
 
 
 # ---------------------------------------------------------------------------
@@ -177,27 +157,22 @@ def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
 
 
 # Exact-duplicate cluster map for the near-dedup collapse prefix, memoized
-# per (app, sf_dir) like the shingle/signature caches it sits beside.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# like the shingle/signature caches it sits beside.
+@memo
 def _cached_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ck, rep): exact-duplicate cluster id (text hash) and the
     min-doc_id representative, restricted to docs that are in the MinHash
     pipeline at all (>= 3 tokens, i.e. present in the signature table).
     One shuffle keyed on the 64-bit ck — text itself never shuffles."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLUSTER_CACHE:
-        sig = _cached_signatures(spark, sf_dir)
-        clusters = (
-            _docs_tokens(spark, sf_dir, wide=True)
-            .select("doc_id", F.xxhash64("text").alias("ck"))
-            .join(sig.select("doc_id"), "doc_id")
-        )
-        _CLUSTER_CACHE[key] = clusters.withColumn(
-            "rep", F.min("doc_id").over(Window.partitionBy("ck"))
-        ).cache()
-    return _CLUSTER_CACHE[key]
+    sig = _cached_signatures(spark, sf_dir)
+    clusters = (
+        _docs_tokens(spark, sf_dir, wide=True)
+        .select("doc_id", F.xxhash64("text").alias("ck"))
+        .join(sig.select("doc_id"), "doc_id")
+    )
+    return clusters.withColumn(
+        "rep", F.min("doc_id").over(Window.partitionBy("ck"))
+    ).cache()
 
 
 # Duplicate-density gate for the exact-collapse prefix: below this fraction
@@ -206,7 +181,6 @@ def _cached_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round-6). Decision memoized per (app, sf_dir) — one 1-row aggregate over
 # the cached cluster map, then free.
 _NEAR_COLLAPSE_MIN_DUP_FRAC = 0.05
-_COLLAPSE_DECISION: dict[tuple[str, str], bool] = {}
 
 
 @register(
@@ -280,25 +254,20 @@ def llm_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo
 def _collapse_dense(spark: SparkSession, sf_dir: str) -> bool:
     """The shared duplicate-density gate for the exact-collapse prefixes
     (MinHash and n-gram paths): one memoized 1-row aggregate over the
     cached cluster map per (app, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COLLAPSE_DECISION:
-        stats = (
-            _cached_clusters(spark, sf_dir)
-            .agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("doc_id") != F.col("rep")).cast("long")).alias("dups"),
-            )
-            .first()
+    stats = (
+        _cached_clusters(spark, sf_dir)
+        .agg(
+            F.count("*").alias("n"),
+            F.sum((F.col("doc_id") != F.col("rep")).cast("long")).alias("dups"),
         )
-        _COLLAPSE_DECISION[key] = (
-            stats["n"] > 0
-            and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
-        )
-    return _COLLAPSE_DECISION[key]
+        .first()
+    )
+    return stats["n"] > 0 and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
 
 
 def _near_dedup_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -430,20 +399,13 @@ def _capped_postings(sh: DataFrame, cap: int) -> DataFrame:
     return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
-_CAPPED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _cached_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df-capped postings, cached once per (app, sf_dir): the ngram-Jaccard
     self-join consumes this from BOTH sides, and keeper resolution /
     train-corpus re-execute the pair plan — uncached, the df aggregation +
     anti-join reruns per subtree per invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CAPPED_CACHE:
-        _CAPPED_CACHE[key] = _capped_postings(
-            _cached_shingles(spark, sf_dir), _NGRAM_DF_CAP
-        ).cache()
-    return _CAPPED_CACHE[key]
+    return _capped_postings(_cached_shingles(spark, sf_dir), _NGRAM_DF_CAP).cache()
 
 
 # The deterministic candidate-pair query, shared verbatim by the
@@ -597,12 +559,11 @@ _NEAR_RESOLVE_SQL = f"""
 
 _MAX_CC_ITERS = 25
 
+
 # Memoized converged label assignments per (app, sf_dir): keeper resolution
 # is consumed twice per sweep (its own key + the near-deduped train corpus)
 # and the propagation loop's per-round actions are the dominant cost.
-_RESOLVE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@memo
 def _propagate_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative min-label propagation to convergence; returns (node, label).
     The pair GRAPH is ~0.1% of the corpus (only near-duplicates appear), so
@@ -678,8 +639,12 @@ def _propagate_loop(pairs: DataFrame) -> DataFrame:
     # graphs.py CC idiom): labels only ever DECREASE, so Σ(labels) is
     # strictly decreasing until the fixpoint — the lazy checkpoint is
     # materialized by the probe agg, ONE job per round where the eager
-    # checkpoint + changed-count pair ran two.
-    mass = labels.agg(F.sum("label")).collect()[0][0]
+    # checkpoint + changed-count pair ran two. Summed as decimal(38,0): a
+    # bigint sum of 64-bit ids overflows, which raises under ANSI mode.
+    def mass_of(df: DataFrame):
+        return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
+
+    mass = mass_of(labels)
     for _ in range(_MAX_CC_ITERS):
         nbr = (
             edges.join(labels, F.col("dst") == F.col("node"))
@@ -698,7 +663,7 @@ def _propagate_loop(pairs: DataFrame) -> DataFrame:
             )
             .localCheckpoint(eager=False)
         )
-        new_mass = merged.agg(F.sum("label")).collect()[0][0]
+        new_mass = mass_of(merged)
         labels = merged
         if new_mass == mass:
             return labels
@@ -728,12 +693,7 @@ def llm_dedup_near_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned; for adversarial long-chain graphs swap the iteration
     body for large-star/small-star (O(log n) rounds) — the surrounding
     contract (pairs in, doc_id→keeper_doc out) is unchanged."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RESOLVE_CACHE:
-        labels = _RESOLVE_CACHE[key]
-    else:
-        labels = _propagate_labels(spark, sf_dir)
-        _RESOLVE_CACHE[key] = labels
+    labels = _propagate_labels(spark, sf_dir)
     w = Window.partitionBy("keeper_doc")
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("keeper_doc")
@@ -1925,11 +1885,6 @@ _KM_ITERS = 4
 # K ~ 1e5-1e8 a 100 TB corpus needs (VERDICT r4 "what's wrong" #3).
 _KM_LITERAL_MAX = 16
 
-# Converged centroids memoized per (app, sf_dir, k): plain Python lists
-# (K x dim floats) — llm_cluster_kmeans and llm_semdedup consume one fit.
-_KM_CACHE: dict[tuple[str, str, int], list] = {}
-
-
 def _km_dist_cols(df: DataFrame, cents: list) -> DataFrame:
     """Append d0..d{K-1} squared-distance columns (zip_with fold, no UDF).
     Small-K only — gated by _KM_LITERAL_MAX in _km_assign."""
@@ -2101,8 +2056,10 @@ def _km_fit_sample_cap(spark: SparkSession) -> int:
     )
 
 
+@memo
 def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
     """Run Lloyd's to _KM_ITERS and return the K x dim centroid list
+    (memoized: llm_cluster_kmeans and llm_semdedup consume one fit)
     (deterministic: seeded from the K lowest vec_ids, lowest-index
     tie-breaks). K defaults to _KM_K; any K works — assignment picks the
     literal-codegen or broadcast-Arrow strategy per _km_assign.
@@ -2128,9 +2085,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
       map-side combine, K x dim rows on the wire), K x dim driver state.
     See llm_cluster_kmeans for the distributed-shape notes."""
     k = _KM_K if k is None else k
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _KM_CACHE:
-        return _KM_CACHE[key]
     # _emb_normed is a memoized cached frame, so each of the fit jobs
     # re-reads the materialized cache, not the parquet+normalize lineage
     emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
@@ -2179,7 +2133,6 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str, k: int | None = None) -> list:
             # empty clusters keep their previous centroid (standard Lloyd's)
             for r in upd:
                 cents[r["cluster"]] = r["cent"]
-    _KM_CACHE[key] = cents
     return cents
 
 
@@ -2493,9 +2446,9 @@ _PQ_M = 8      # subspaces
 _PQ_DSUB = 8   # dims per subspace (8 x 8 = 64)
 _PQ_KS = 16    # centroids per subspace -> 4-bit codes
 _PQ_POOL = 100  # ADC candidate pool per query before exact rescore
-_PQ_CACHE: dict[tuple[str, str], list] = {}
 
 
+@memo
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Per-subspace K=16 codebooks fit by the SAME driver-side Lloyd's as
     _kmeans_fit's sampled branch (seeds = the K lowest vec_ids' subvectors,
@@ -2507,9 +2460,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     by design (how FAISS does it); encoding below is distributed."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PQ_CACHE:
-        return _PQ_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -2533,7 +2483,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
                 if len(members):
                     cmat[c] = members.mean(axis=0)
         books.append([row.tolist() for row in cmat])
-    _PQ_CACHE[key] = books
     return books
 
 
@@ -2698,9 +2647,9 @@ _IVFPQ_NPROBE = 5
 # Replication costs 2x index size — but the index is PQ codes, so it is
 # still 16x smaller than raw vectors.
 _IVFPQ_NASSIGN = 2
-_IVFPQ_CACHE: dict[tuple[str, str], tuple] = {}
 
 
+@memo
 def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
     """(centroids, residual codebooks) for the composed index — the
     production IVF-PQ refinement: codebooks are trained on RESIDUALS
@@ -2718,9 +2667,6 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
     sf0.1 recall@5 0.891 -> 0.945)."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -2756,8 +2702,7 @@ def _ivfpq_model(spark: SparkSession, sf_dir: str) -> tuple:
                 if len(members):
                     cb[c] = members.mean(axis=0)
         books.append(cb)
-    _IVFPQ_CACHE[key] = (cmat, books)
-    return _IVFPQ_CACHE[key]
+    return cmat, books
 
 
 def _ivfpq_encode_udf(spark: SparkSession, cmat, books):
@@ -3003,9 +2948,7 @@ _KNNG_REFINE_DEGREE = 16  # intermediate out-degree during build+refine
 # Spherical-k-means cell centroids memoized per (app, sf_dir, k): unit-norm
 # K x dim float lists — the parametric-K sibling of _ivfpq_model's coarse
 # quantizer (that one is pinned at _IVF_K and carries PQ codebooks).
-_SPH_CACHE: dict[tuple[str, str, int], list] = {}
-
-
+@memo
 def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
     """Unit-norm spherical-k-means centroids (Lloyd on the sphere:
     assign by dot product, re-mean, renormalize; deterministic lowest-
@@ -3017,9 +2960,6 @@ def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
     is why the build replicates into 3 cells rather than 2)."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _SPH_CACHE:
-        return _SPH_CACHE[key]
     emb = _emb_normed(spark, sf_dir)
     cap = _km_fit_sample_cap(spark)
     rows = (
@@ -3042,10 +2982,10 @@ def _spherical_cells(spark: SparkSession, sf_dir: str, k: int) -> list:
                 nrm = np.sqrt((mu * mu).sum())
                 if nrm > 0:
                     cmat[c] = mu / nrm
-    _SPH_CACHE[key] = [row.tolist() for row in cmat]
-    return _SPH_CACHE[key]
+    return [row.tolist() for row in cmat]
 
 
+@memo
 def _knng_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, dvec=UNIT vector, cells=top-_KNNG_IVF_NASSIGN cell ids)
     for the graph build and its search-entry map. Assignment runs on
@@ -3060,58 +3000,32 @@ def _knng_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python-boundary evaluation — twice per _cell_topk_edges call (src
     AND dst of the per-cell self-join), again in _nsw_entries, again in
     the index persist. Bounded state: N x (dvec + NASSIGN ints) narrow
-    rows, same discipline as _VEC_GROUPS_CACHE; evicted by
-    ann_index_build(force=True) alongside the other component memos. The
-    key carries the embeddings file's fingerprint so an in-place rewrite
-    of the same path retires the checkpointed assignment."""
-    from sdp_spark.sources.fixtures import table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    if key in _KNNG_ASSIGNED_CACHE:
-        return _KNNG_ASSIGNED_CACHE[key]
+    rows, same discipline as _vec_groups."""
     emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec", "norm")
     n = _emb_count(spark, sf_dir)
     k_cells = max(8, min(256, int(n ** 0.5)))
     cents = _spherical_cells(spark, sf_dir, k_cells)
     unit = F.transform("dvec", lambda x: x / F.col("norm"))
-    _KNNG_ASSIGNED_CACHE[key] = _km_assign(
+    return _km_assign(
         emb.select("vec_id", unit.alias("dvec")),
         cents,
         # the fit clamps k to its sample (ADVICE r12 #1), so a tiny
         # corpus can return fewer than NASSIGN centroids
         probe_n=min(_KNNG_IVF_NASSIGN, len(cents)),
     ).localCheckpoint(eager=True)
-    return _KNNG_ASSIGNED_CACHE[key]
 
 
 # Exact-duplicate VECTOR groups, memoized per (app, sf_dir): (vec_id, gid)
 # with gid = the group's global-min vec_id. The ANN build's collapse gate
 # rides these the way the text-dedup chain rides _cached_clusters.
-_VEC_GROUPS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Cell-assigned corpus per (app, sf_dir) — see _knng_assigned.
-_KNNG_ASSIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_VEC_DUP_DENSE: dict[tuple[str, str], bool] = {}
-# Refined k-NN edge lists per (app, sf, k_out) — see _ivf_knn_edges.
-_KNN_EDGES_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
+@memo
 def _vec_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VEC_GROUPS_CACHE:
-        emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
-        g = emb.groupBy("dvec").agg(F.min("vec_id").alias("gid"))
-        _VEC_GROUPS_CACHE[key] = (
-            emb.join(g, "dvec")
-            .select("vec_id", "gid")
-            .localCheckpoint(eager=True)
-        )
-    return _VEC_GROUPS_CACHE[key]
+    emb = _emb_normed(spark, sf_dir).select("vec_id", "dvec")
+    g = emb.groupBy("dvec").agg(F.min("vec_id").alias("gid"))
+    return emb.join(g, "dvec").select("vec_id", "gid").localCheckpoint(eager=True)
 
 
+@memo
 def _vec_dup_dense(spark: SparkSession, sf_dir: str) -> bool:
     """Duplicate-density gate for the ANN-graph collapse prefix — the
     _collapse_dense doctrine applied to vectors: below the shared 5%
@@ -3121,19 +3035,14 @@ def _vec_dup_dense(spark: SparkSession, sf_dir: str) -> bool:
     self-join output-bound and the collapse is the difference between
     finishing and not (measured: the 90%-dup 100x fixture's plain build
     did not finish in 10 min; collapsed, seconds)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VEC_DUP_DENSE:
-        stats = _vec_groups(spark, sf_dir).agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("vec_id") != F.col("gid")).cast("long")).alias("dups"),
-        ).first()
-        _VEC_DUP_DENSE[key] = (
-            stats["n"] > 0
-            and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
-        )
-    return _VEC_DUP_DENSE[key]
+    stats = _vec_groups(spark, sf_dir).agg(
+        F.count("*").alias("n"),
+        F.sum((F.col("vec_id") != F.col("gid")).cast("long")).alias("dups"),
+    ).first()
+    return stats["n"] > 0 and stats["dups"] / stats["n"] >= _NEAR_COLLAPSE_MIN_DUP_FRAC
 
 
+@memo
 def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
     """IVF-bootstrapped approximate k-NN edge list — the scale-safe graph
     BUILD the exact `llm_knn_graph` cannot be (VERDICT r11 next-round
@@ -3158,9 +3067,6 @@ def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
     `_kmeans_fit`; ties in assignment break to the lowest centroid
     index; cosine is the shared 4 dp fold; ranking tiebreaks on
     neighbor_id. Returns (vec_id, neighbor_id, cos_sim, rnk)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k_out)
-    if key in _KNN_EDGES_CACHE:
-        return _KNN_EDGES_CACHE[key]
     k_inner = max(k_out, _KNNG_REFINE_DEGREE)
     if _vec_dup_dense(spark, sf_dir):
         # refinement runs INSIDE the collapse, at DIRECTION grain (the
@@ -3181,12 +3087,8 @@ def _ivf_knn_edges(spark: SparkSession, sf_dir: str, k_out: int = _NSW_K):
         )
     # memoized per (app, sf, k): the graph is consumed by llm_knn_graph_ivf,
     # the NSW search, the recall eval AND the index persist in one session —
-    # one checkpointed build serves all (bounded: k_out*N narrow rows;
-    # released by sdp_spark.unpersist_all)
-    _KNN_EDGES_CACHE[key] = (
-        refined.filter(F.col("rnk") <= k_out).localCheckpoint(eager=True)
-    )
-    return _KNN_EDGES_CACHE[key]
+    # one checkpointed build serves all (bounded: k_out*N narrow rows)
+    return refined.filter(F.col("rnk") <= k_out).localCheckpoint(eager=True)
 
 
 def _nndescent_refine(
@@ -3225,15 +3127,13 @@ def _nndescent_refine(
     # vectors by two joins and ran the interpreted zip_with fold per pair
     # (~2M pairs/round = the whole refine's CPU). Now only the 16-byte id
     # pairs cross the Arrow boundary; each task loads the unit-vector
-    # matrix ONCE from a per-invocation executor-written side file
-    # (nothing persists across invocations), gathers rows by searchsorted
+    # matrix ONCE from a per-invocation executor-written side file (a
+    # memo.scratch dir, removed by release), gathers rows by searchsorted
     # id, and accumulates the dot PER DIMENSION (acc += A[:,i]·B[:,i]
     # from 0.0) — the identical IEEE left-fold order over the identical
     # unit values (numpy x/norm == the JVM transform division), so the
     # doubles are bit-identical. dround + the ranking window stay JVM.
-    import tempfile
-
-    side = tempfile.mkdtemp(prefix="sdp_refine_unit_")
+    side = scratch(spark, sf_dir, "sdp_refine_unit_")
     unit.coalesce(1).write.mode("overwrite").parquet(side)
 
     def _pair_dots(batches):
@@ -3266,11 +3166,18 @@ def _nndescent_refine(
                 continue
             va_ids = b.column("vec_id").to_numpy()
             vb_ids = b.column("neighbor_id").to_numpy()
-            ia = _np.searchsorted(sid, va_ids)
-            ib = _np.searchsorted(sid, vb_ids)
             # every pair id must be a unit-frame id (edges derive from the
-            # assigned corpus) — a miss would silently mis-gather
-            assert (sid[ia] == va_ids).all() and (sid[ib] == vb_ids).all()
+            # assigned corpus) — a miss would silently mis-gather. Clip
+            # first: an id past the largest searchsorts to len(sid)
+            ia = _np.minimum(_np.searchsorted(sid, va_ids), len(sid) - 1)
+            ib = _np.minimum(_np.searchsorted(sid, vb_ids), len(sid) - 1)
+            if not ((sid[ia] == va_ids).all() and (sid[ib] == vb_ids).all()):
+                bad = _np.concatenate(
+                    [va_ids[sid[ia] != va_ids], vb_ids[sid[ib] != vb_ids]]
+                )
+                raise ValueError(
+                    f"NNDescent pair ids not in the embeddings: {bad[:5].tolist()}"
+                )
             A = U[ia]
             B = U[ib]
             acc = _np.zeros(len(va_ids))
@@ -3606,26 +3513,17 @@ def llm_sim_search_nsw(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Undirected in-plan edge set, memoized per (app, sf): the persisted index
 # pre-merges this at BUILD time (r14a edges_undirected table) because it is
 # a per-index-version artifact, but the in-plan search re-paid the
-# union + distinct + eager checkpoint on EVERY call. Same lifecycle as
-# _KNN_EDGES_CACHE it derives from (released by unpersist_all; evicted by
-# ann_index_build(force=True) beside its source).
-_NSW_UND_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# union + distinct + eager checkpoint on EVERY call.
+@memo
 def _nsw_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NSW_UND_CACHE:
-        knn = _ivf_knn_edges(spark, sf_dir, k_out=_NSW_K).select(
-            F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
-        )
-        _NSW_UND_CACHE[key] = (
-            knn.unionByName(
-                knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    return _NSW_UND_CACHE[key]
+    knn = _ivf_knn_edges(spark, sf_dir, k_out=_NSW_K).select(
+        F.col("vec_id").alias("src"), F.col("neighbor_id").alias("dst")
+    )
+    return (
+        knn.unionByName(knn.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def _nsw_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3699,8 +3597,10 @@ def _nsw_beam_search_frames(
     # after the loop (ADVICE r11: the previous shape re-unioned the
     # growing visited frame with distinct() + eager checkpoint every
     # round — O(rounds^2) materialized rows and 3 blocking jobs/round).
-    # Only the frontier checkpoints: each round's scored frame then roots
-    # at a checkpointed frontier, so lineage depth stays constant anyway.
+    # Each round's SCORED frame is the one eager checkpoint (r15, see
+    # score() below): the beam window and the final union both read it,
+    # and the next round's frontier roots at it, so lineage depth stays
+    # constant.
     round_frames = []
     bw = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("node")
@@ -3828,21 +3728,11 @@ def ann_index_build(
         shutil.rmtree(path, ignore_errors=True)
         # force promises "a real build, never a cached no-op" — but the
         # component builders (_spherical_cells / _ivf_knn_edges /
-        # _vec_groups) memoize per applicationId, so without eviction
-        # every rebuild after the first reused the checkpointed edges
-        # and fitted centroids and the published build wall
-        # under-reported the true cost (ADVICE r13 #4)
-        app = spark.sparkContext.applicationId
-        for cache in (
-            _SPH_CACHE,
-            _KNN_EDGES_CACHE,
-            _NSW_UND_CACHE,
-            _VEC_GROUPS_CACHE,
-            _VEC_DUP_DENSE,
-            _KNNG_ASSIGNED_CACHE,
-        ):
-            for k in [k for k in cache if k[0] == app and k[1] == sf_dir]:
-                cache.pop(k, None)
+        # _vec_groups) are session memos, so without a release every
+        # rebuild after the first reused the checkpointed edges and fitted
+        # centroids and the published build wall under-reported the true
+        # cost (ADVICE r13 #4)
+        release(sf_dir)
     os.makedirs(path, exist_ok=True)
     cents = _spherical_cells(
         spark,

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sdp_spark.functions.num import dround
+from sdp_spark.memo import memo
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table
 
@@ -156,10 +157,10 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIN_STAGED: dict[str, str] = {}
 _N_BIN_FILES = 20
 
 
+@memo
 def _binfiles_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage _N_BIN_FILES tiny binary payload files (doc_<id>.bin = the doc
     text's UTF-8 bytes) once per sf — the raw-asset landing dir a multimodal
@@ -168,30 +169,27 @@ def _binfiles_dir(spark: SparkSession, sf_dir: str) -> str:
     path."""
     import os
     import shutil
-    import tempfile
 
     from sdp_spark.sources.fixtures import cache_dir
 
-    if sf_dir not in _BIN_STAGED:
-        out = cache_dir(sf_dir, "binfiles")
-        if not os.path.isdir(out):
-            tmp = f"{out}.tmp.{os.getpid()}"
-            os.makedirs(tmp, exist_ok=True)
-            rows = (
-                table(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < _N_BIN_FILES)
-                .select("doc_id", "text")
-                .collect()
-            )
-            for r in rows:
-                with open(os.path.join(tmp, f"doc_{r['doc_id']}.bin"), "wb") as f:
-                    f.write(r["text"].encode("utf-8"))
-            try:
-                os.rename(tmp, out)
-            except OSError:  # lost the build race: another process landed it
-                shutil.rmtree(tmp, ignore_errors=True)
-        _BIN_STAGED[sf_dir] = out
-    return _BIN_STAGED[sf_dir]
+    out = cache_dir(sf_dir, "binfiles")
+    if not os.path.isdir(out):
+        tmp = f"{out}.tmp.{os.getpid()}"
+        os.makedirs(tmp, exist_ok=True)
+        rows = (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < _N_BIN_FILES)
+            .select("doc_id", "text")
+            .collect()
+        )
+        for r in rows:
+            with open(os.path.join(tmp, f"doc_{r['doc_id']}.bin"), "wb") as f:
+                f.write(r["text"].encode("utf-8"))
+        try:
+            os.rename(tmp, out)
+        except OSError:  # lost the build race: another process landed it
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 @register(

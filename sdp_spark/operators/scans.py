@@ -14,7 +14,6 @@ control file sizes. No collect() anywhere.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,17 +21,11 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from sdp_spark.functions.num import DEC, dround, dsum, sql_dsum
+from sdp_spark.memo import memo, scratch
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import cache_dir, table
 
 _SEC = "2.1 sources/sinks"
-
-# Mixed-schema dataset dirs for scan_schema_evolution, built once per sf_dir.
-_SCHEMA_EVO_CACHE: dict[str, str] = {}
-
-# Cache converted csv/json copies of fixture tables per (sf_dir, fmt) so
-# repeated query runs don't rewrite them.
-_CONVERTED: dict[tuple[str, str], str] = {}
 
 
 def _converted_dir(
@@ -44,7 +37,7 @@ def _converted_dir(
     **options: str,
 ) -> str:
     """One cache policy for every converted-copy format (csv/json/xml):
-    per-process memo + an on-disk _SUCCESS guard so a partially-written
+    session memo + an on-disk _SUCCESS guard so a partially-written
     dir from a killed process is rewritten, never trusted.
 
     The staging *spec* — column subset and writer options — is folded into
@@ -53,25 +46,30 @@ def _converted_dir(
     distinct dirs, and a staged copy written by an older code version is
     invalidated the moment the spec changes.
     """
+    cols = tuple(columns) if columns else None
+    return _stage_converted(spark, sf_dir, name, fmt, cols, tuple(sorted(options.items())))
+
+
+@memo
+def _stage_converted(
+    spark: SparkSession, sf_dir: str, name: str, fmt: str, columns, options
+) -> str:
     import hashlib
 
-    spec = repr((list(columns) if columns else None, sorted(options.items())))
+    spec = repr((list(columns) if columns else None, list(options)))
     digest = hashlib.sha256(spec.encode()).hexdigest()[:8]
-    key = (sf_dir, f"{name}.{fmt}.{digest}")
-    if key not in _CONVERTED:
-        out = cache_dir(sf_dir, f"{name}_{fmt}_{digest}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            df = table(spark, sf_dir, name)
-            if columns:
-                df = df.select(*columns)
-            writer = df.write.mode("overwrite").format(fmt)
-            if fmt == "csv":
-                writer = writer.option("header", "true")
-            for k, v in options.items():
-                writer = writer.option(k, v)
-            writer.save(out)
-        _CONVERTED[key] = out
-    return _CONVERTED[key]
+    out = cache_dir(sf_dir, f"{name}_{fmt}_{digest}")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        df = table(spark, sf_dir, name)
+        if columns:
+            df = df.select(*columns)
+        writer = df.write.mode("overwrite").format(fmt)
+        if fmt == "csv":
+            writer = writer.option("header", "true")
+        for k, v in options:
+            writer = writer.option(k, v)
+        writer.save(out)
+    return out
 
 
 @register(
@@ -153,16 +151,10 @@ def jdbc_conn(sf_dir: str) -> tuple[str, dict[str, str], bool]:
     )
 
 
-# Derby DBs start empty: seed source tables once per (process, url, table).
-_JDBC_SEEDED: set[tuple[str, str]] = set()
-
-
-def _seed_jdbc_table(
-    spark: SparkSession, sf_dir: str, url: str, extra: dict[str, str], name: str,
-    column_types: str,
-) -> None:
-    if (url, name) in _JDBC_SEEDED:
-        return
+# Derby DBs start empty: seed source tables once per session and table.
+@memo
+def _seed_jdbc_table(spark: SparkSession, sf_dir: str, name: str, column_types: str) -> None:
+    url, extra, _ = jdbc_conn(sf_dir)
     w = (
         table(spark, sf_dir, name)
         .coalesce(1)
@@ -176,7 +168,6 @@ def _seed_jdbc_table(
     for k, v in extra.items():
         w = w.option(k, v)
     w.save()
-    _JDBC_SEEDED.add((url, name))
 
 
 @register(
@@ -196,7 +187,7 @@ def scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     url, extra, embedded = jdbc_conn(sf_dir)
     if embedded:
         _seed_jdbc_table(
-            spark, sf_dir, url, extra, "nation",
+            spark, sf_dir, "nation",
             "n_nationkey INTEGER, n_name VARCHAR(64), n_regionkey INTEGER",
         )
     r = (
@@ -211,10 +202,6 @@ def scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k, v in extra.items():
         r = r.option(k, v)
     return r.load().select("n_nationkey", "n_name", "n_regionkey")
-
-
-def _tmp_sink(name: str) -> str:
-    return tempfile.mkdtemp(prefix=f"sdp_sink_{name}_")
 
 
 @register(
@@ -273,7 +260,7 @@ def sink_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INSERT INTO ... SELECT: append write, then read back (round-trip check)."""
-    out = _tmp_sink("append")
+    out = scratch(spark, sf_dir, "sdp_sink_append_")
     src = table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
@@ -290,7 +277,7 @@ def sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUNCATE + reload semantics: second write replaces the first."""
-    out = _tmp_sink("overwrite")
+    out = scratch(spark, sf_dir, "sdp_sink_overwrite_")
     orders = table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_totalprice").write.mode("overwrite").parquet(out)
     (
@@ -315,7 +302,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the layout primitive: partition pruning turns
     point/range queries on the partition key into O(selected partitions).
     """
-    out = _tmp_sink("partitioned")
+    out = scratch(spark, sf_dir, "sdp_sink_partitioned_")
     orders = table(spark, sf_dir, "orders")
     (
         orders.select("o_orderkey", "o_totalprice", "o_orderstatus")
@@ -326,9 +313,6 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(out)
     # partition column round-trips as string; restore column order/types
     return back.select("o_orderkey", "o_totalprice", F.col("o_orderstatus").cast("string"))
-
-
-_PRUNED_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -343,18 +327,21 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate → only the matching directory is listed/read (PartitionFilters
     in the plan, zero IO for other statuses). At 100 TB this is the
     difference between scanning one partition and the whole table."""
-    if sf_dir not in _PRUNED_CACHE:
-        out = cache_dir(sf_dir, "orders_parted")
-        (
-            table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_totalprice", "o_orderstatus")
-            .write.mode("overwrite")
-            .partitionBy("o_orderstatus")
-            .parquet(out)
-        )
-        _PRUNED_CACHE[sf_dir] = out
-    back = spark.read.parquet(_PRUNED_CACHE[sf_dir]).filter(F.col("o_orderstatus") == "F")
+    back = spark.read.parquet(_orders_parted(spark, sf_dir)).filter(F.col("o_orderstatus") == "F")
     return back.select("o_orderkey", "o_totalprice", F.col("o_orderstatus").cast("string"))
+
+
+@memo
+def _orders_parted(spark: SparkSession, sf_dir: str) -> str:
+    out = cache_dir(sf_dir, "orders_parted")
+    (
+        table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_totalprice", "o_orderstatus")
+        .write.mode("overwrite")
+        .partitionBy("o_orderstatus")
+        .parquet(out)
+    )
+    return out
 
 
 @register(
@@ -394,7 +381,7 @@ def sink_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged = orders.join(
         updates.select("o_orderkey"), "o_orderkey", "left_anti"
     ).unionByName(updates)
-    out = _tmp_sink("upsert")
+    out = scratch(spark, sf_dir, "sdp_sink_upsert_")
     merged.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     return back.select(
@@ -437,7 +424,7 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_totalprice"),
         "o_orderstatus",
     )
-    out = _tmp_sink("dml")
+    out = scratch(spark, sf_dir, "sdp_sink_dml_")
     updated.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -450,12 +437,14 @@ def dml_update_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source (second columnar format; vectorized reader + predicate
     pushdown like parquet). Converted copy cached per sf."""
-    key = (sf_dir, "nation.orc")
-    if key not in _CONVERTED:
-        out = cache_dir(sf_dir, "nation_orc")
-        table(spark, sf_dir, "nation").write.mode("overwrite").orc(out)
-        _CONVERTED[key] = out
-    return spark.read.orc(_CONVERTED[key]).select("n_nationkey", "n_name", "n_regionkey")
+    return spark.read.orc(_nation_orc(spark, sf_dir)).select("n_nationkey", "n_name", "n_regionkey")
+
+
+@memo
+def _nation_orc(spark: SparkSession, sf_dir: str) -> str:
+    out = cache_dir(sf_dir, "nation_orc")
+    table(spark, sf_dir, "nation").write.mode("overwrite").orc(out)
+    return out
 
 
 @register(
@@ -480,22 +469,25 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache_dir layout (stable across sessions — no per-session /tmp litter);
     overwrite-then-append keeps the build idempotent if a prior run died
     mid-write."""
-    if sf_dir not in _SCHEMA_EVO_CACHE:
-        out = cache_dir(sf_dir, "orders_schema_evo")
-        done = os.path.join(out, "_GENERATIONS_DONE")
-        if not os.path.exists(done):
-            o = table(spark, sf_dir, "orders")
-            o.filter(F.col("o_orderkey") % 2 == 0).select(
-                "o_orderkey", "o_custkey"
-            ).write.mode("overwrite").parquet(out)
-            o.filter(F.col("o_orderkey") % 2 == 1).select(
-                "o_orderkey", "o_totalprice"
-            ).write.mode("append").parquet(out)
-            with open(done, "w") as fh:
-                fh.write("ok")
-        _SCHEMA_EVO_CACHE[sf_dir] = out
-    back = spark.read.option("mergeSchema", "true").parquet(_SCHEMA_EVO_CACHE[sf_dir])
+    back = spark.read.option("mergeSchema", "true").parquet(_orders_schema_evo(spark, sf_dir))
     return back.select("o_orderkey", "o_custkey", "o_totalprice")
+
+
+@memo
+def _orders_schema_evo(spark: SparkSession, sf_dir: str) -> str:
+    out = cache_dir(sf_dir, "orders_schema_evo")
+    done = os.path.join(out, "_GENERATIONS_DONE")
+    if not os.path.exists(done):
+        o = table(spark, sf_dir, "orders")
+        o.filter(F.col("o_orderkey") % 2 == 0).select(
+            "o_orderkey", "o_custkey"
+        ).write.mode("overwrite").parquet(out)
+        o.filter(F.col("o_orderkey") % 2 == 1).select(
+            "o_orderkey", "o_totalprice"
+        ).write.mode("append").parquet(out)
+        with open(done, "w") as fh:
+            fh.write("ok")
+    return out
 
 
 @register(
@@ -537,7 +529,7 @@ def sink_insert_ignore(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("N").alias("o_orderstatus"),
     )
     fresh = incoming.join(target.select("o_orderkey"), "o_orderkey", "left_anti")
-    out = _tmp_sink("insert_ignore")
+    out = scratch(spark, sf_dir, "sdp_sink_insert_ignore_")
     target.unionByName(fresh).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -578,7 +570,7 @@ def sink_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("N").alias("o_orderstatus"),
     )
     survivors = target.join(incoming.select("o_orderkey"), "o_orderkey", "left_anti")
-    out = _tmp_sink("replace")
+    out = scratch(spark, sf_dir, "sdp_sink_replace_")
     survivors.unionByName(incoming).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -605,7 +597,7 @@ def sink_outfile_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     write is sharded (one file per partition): at 100 TB an export IS a
     distributed dataset, and any single-file requirement belongs to the
     consumer's cat, not the engine's plan."""
-    out = _tmp_sink("outfile_csv")
+    out = scratch(spark, sf_dir, "sdp_sink_outfile_csv_")
     src = table(spark, sf_dir, "nation").select(
         "n_nationkey",
         F.concat(F.col("n_name"), F.lit(";")).alias("n_name_semi"),
@@ -620,29 +612,25 @@ def sink_outfile_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).csv(out)
 
 
-_COMPACT_STAGED: dict[str, str] = {}
 _COMPACT_SRC_FILES = 64
 _COMPACT_TARGET_FILES = 4
 _LAST_COMPACT_OUT: str | None = None
 
 
+@memo
 def _small_files_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events once per sf as _COMPACT_SRC_FILES tiny parquet files —
     the classic streaming-ingest debris a compaction job consumes."""
-    from sdp_spark.sources.fixtures import cache_dir
-
-    if sf_dir not in _COMPACT_STAGED:
-        out = cache_dir(sf_dir, "events_small_files")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            (
-                table(spark, sf_dir, "events")
-                .select("event_id", "user_id", "event_type", "value")
-                .repartition(_COMPACT_SRC_FILES)
-                .write.mode("overwrite")
-                .parquet(out)
-            )
-        _COMPACT_STAGED[sf_dir] = out
-    return _COMPACT_STAGED[sf_dir]
+    out = cache_dir(sf_dir, "events_small_files")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        (
+            table(spark, sf_dir, "events")
+            .select("event_id", "user_id", "event_type", "value")
+            .repartition(_COMPACT_SRC_FILES)
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+    return out
 
 
 @register(
@@ -672,7 +660,7 @@ def sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     coalesce would chain the skew of the debris files into the output."""
     global _LAST_COMPACT_OUT
     src_dir = _small_files_dir(spark, sf_dir)
-    out = _tmp_sink("compacted")
+    out = scratch(spark, sf_dir, "sdp_sink_compacted_")
     (
         spark.read.parquet(src_dir)
         .repartition(_COMPACT_TARGET_FILES)
@@ -721,7 +709,7 @@ def sink_autoincrement(spark: SparkSession, sf_dir: str) -> DataFrame:
        to ~#cores so bucket sorts stay in-memory; skewed keys get
        quantile-based boundaries (approxQuantile) instead of equi-width."""
     ids = _autoincrement_ids(spark, sf_dir)
-    out = _tmp_sink("autoincrement")
+    out = scratch(spark, sf_dir, "sdp_sink_autoincrement_")
     ids.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -788,7 +776,7 @@ def sink_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. The oracle pins lossless export of every field. At 100 TB:
     same plan, more files — compression (zstd) and ~1 GB targets come from
     the same writer options."""
-    out = _tmp_sink("jsonl")
+    out = scratch(spark, sf_dir, "sdp_sink_jsonl_")
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     d.write.mode("overwrite").json(out)
     schema = T.StructType(
@@ -862,7 +850,7 @@ def dml_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(2).alias("version"),
     )
     merged = closed_or_kept.unionByName(new_versions)
-    out = _tmp_sink("scd2")
+    out = scratch(spark, sf_dir, "sdp_sink_scd2_")
     merged.write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -981,7 +969,7 @@ def dml_truncate_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     that surviving partitions are byte-identical to the source."""
     import shutil as _sh
 
-    out = _tmp_sink("truncate_part")
+    out = scratch(spark, sf_dir, "sdp_sink_truncate_part_")
     (
         table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
@@ -1006,9 +994,6 @@ def _z16_sql(xcol: str, ycol: str) -> str:
         terms.append(f"(CAST(FLOOR({xcol} / {1 << i}) AS BIGINT) % 2) * {1 << (2 * i)}")
         terms.append(f"(CAST(FLOOR({ycol} / {1 << i}) AS BIGINT) % 2) * {1 << (2 * i + 1)}")
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-
-_ZORDER_READY: set[str] = set()
 
 
 @register(
@@ -1048,25 +1033,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests/test_plans.py::test_zorder_files_cluster_both_dims.
     The z-key is pure codegen arithmetic (shared expression string with
     the oracle — no engine bit-op divergence)."""
-    out = cache_dir(sf_dir, "orders_zorder")
-    o = table(spark, sf_dir, "orders")
-    keyed = o.select(
-        "o_orderkey",
-        (F.col("o_custkey") % 256).alias("xb"),
-        (
-            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
-            % 256
-        ).alias("yb"),
-    ).withColumn("zkey", F.expr(_z16_sql("xb", "yb")))
-    if out not in _ZORDER_READY:
-        (
-            keyed.repartitionByRange(16, "zkey")
-            .sortWithinPartitions("zkey")
-            .write.mode("overwrite")
-            .parquet(out)
-        )
-        _ZORDER_READY.add(out)
-    back = spark.read.parquet(out)
+    back = spark.read.parquet(_orders_zorder(spark, sf_dir))
     return back.groupBy(
         F.floor(F.col("zkey") / 4096).cast("int").alias("zblock")
     ).agg(
@@ -1076,6 +1043,26 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("yb").cast("int").alias("min_y"),
         F.max("yb").cast("int").alias("max_y"),
     )
+
+
+@memo
+def _orders_zorder(spark: SparkSession, sf_dir: str) -> str:
+    out = cache_dir(sf_dir, "orders_zorder")
+    keyed = table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        (F.col("o_custkey") % 256).alias("xb"),
+        (
+            F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
+            % 256
+        ).alias("yb"),
+    ).withColumn("zkey", F.expr(_z16_sql("xb", "yb")))
+    (
+        keyed.repartitionByRange(16, "zkey")
+        .sortWithinPartitions("zkey")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+    return out
 
 
 @register(
@@ -1142,7 +1129,7 @@ def sink_odku(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     fresh = incoming.join(target.select("o_orderkey"), "o_orderkey", "left_anti")
-    out = _tmp_sink("odku")
+    out = scratch(spark, sf_dir, "sdp_sink_odku_")
     updated.unionByName(fresh).write.mode("overwrite").parquet(out)
     return spark.read.parquet(out)
 
@@ -1171,14 +1158,11 @@ def sink_sized_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = table(spark, sf_dir, "lineitem").filter(
         F.year("l_shipdate") == 1997
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    out = _tmp_sink("sized_files")
+    out = scratch(spark, sf_dir, "sdp_sink_sized_files_")
     src.write.mode("overwrite").option(
         "maxRecordsPerFile", _SIZED_MAX_RECORDS
     ).parquet(out)
     return spark.read.parquet(out)
-
-
-_GLOB_CACHE: dict[str, str] = {}
 
 
 @register(
@@ -1197,25 +1181,26 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     LISTING time — the scan plan never opens a skipped file. The fixture
     stages two nested subtrees plus a decoy .json sidecar; the oracle is
     the union of the real files' content."""
-    if sf_dir not in _GLOB_CACHE:
-        import os
-
-        root = cache_dir(sf_dir, "glob_landing")
-        n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-        n.filter(F.col("n_regionkey") == 0).drop("n_regionkey").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "team_a", "day=01"))
-        n.filter(F.col("n_regionkey") == 1).drop("n_regionkey").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(root, "team_b", "nested", "deeper"))
-        with open(os.path.join(root, "team_a", "manifest.json"), "w") as fh:
-            fh.write('{"decoy": true}')
-        _GLOB_CACHE[sf_dir] = root
     return (
         spark.read.option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.parquet")
-        .parquet(_GLOB_CACHE[sf_dir])
+        .parquet(_glob_landing(spark, sf_dir))
     )
+
+
+@memo
+def _glob_landing(spark: SparkSession, sf_dir: str) -> str:
+    root = cache_dir(sf_dir, "glob_landing")
+    n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    n.filter(F.col("n_regionkey") == 0).drop("n_regionkey").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(root, "team_a", "day=01"))
+    n.filter(F.col("n_regionkey") == 1).drop("n_regionkey").write.mode(
+        "overwrite"
+    ).parquet(os.path.join(root, "team_b", "nested", "deeper"))
+    with open(os.path.join(root, "team_a", "manifest.json"), "w") as fh:
+        fh.write('{"decoy": true}')
+    return root
 
 
 _RESTATE_MONTH = "1997-03"
@@ -1254,7 +1239,7 @@ def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround("o_totalprice").alias("o_totalprice"),
         F.date_format("o_orderdate", "yyyy-MM").alias("m"),
     )
-    out = _tmp_sink("dyn_overwrite")
+    out = scratch(spark, sf_dir, "sdp_sink_dyn_overwrite_")
     base.write.mode("overwrite").partitionBy("m").parquet(out)
     restated = base.filter(F.col("m") == _RESTATE_MONTH).withColumn(
         "o_totalprice", dround(F.col("o_totalprice") * 0.9)
@@ -1439,20 +1424,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partition value recovered by regexp from _metadata.file_path and
     the per-dir distinct file count are both deterministic — and the
     oracle states them from the source table directly."""
-    key = (sf_dir, "lineitem.meta_part")
-    if key not in _CONVERTED:
-        out = cache_dir(sf_dir, "lineitem_meta_part")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            (
-                table(spark, sf_dir, "lineitem")
-                .select("l_orderkey", "l_quantity", "l_returnflag")
-                .repartition("l_returnflag")
-                .write.mode("overwrite")
-                .partitionBy("l_returnflag")
-                .parquet(out)
-            )
-        _CONVERTED[key] = out
-    df = spark.read.parquet(_CONVERTED[key])
+    df = spark.read.parquet(_lineitem_meta_part(spark, sf_dir))
     return (
         df.select(
             F.regexp_extract(
@@ -1467,6 +1439,21 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("flag")
     )
+
+
+@memo
+def _lineitem_meta_part(spark: SparkSession, sf_dir: str) -> str:
+    out = cache_dir(sf_dir, "lineitem_meta_part")
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+        (
+            table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_quantity", "l_returnflag")
+            .repartition("l_returnflag")
+            .write.mode("overwrite")
+            .partitionBy("l_returnflag")
+            .parquet(out)
+        )
+    return out
 
 
 @register(
@@ -2080,9 +2067,7 @@ def txn_read_at(spark: SparkSession, root: str, version: int) -> DataFrame:
     )
 
 
-_TXN_HISTORY_READY: set[str] = set()
-
-
+@memo
 def _txn_history_root(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session) the shared 2-version history table:
     v1 = the orders seed, v2 = TXN A's three statements. Both time-travel
@@ -2091,9 +2076,6 @@ def _txn_history_root(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     root = cache_dir(sf_dir, "txn_history")
-    tag = f"{spark.sparkContext.applicationId}:{root}"
-    if tag in _TXN_HISTORY_READY:
-        return root
     complete = all(
         os.path.exists(_txn_commit_file(root, v)) for v in (1, 2)
     )
@@ -2107,7 +2089,6 @@ def _txn_history_root(spark: SparkSession, sf_dir: str) -> str:
         )
         txn_commit(root, 1, txn_stage(seed, root, 1), 1)
         txn_apply(spark, root)
-    _TXN_HISTORY_READY.add(tag)
     return root
 
 

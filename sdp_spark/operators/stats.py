@@ -48,6 +48,7 @@ from sdp_spark.functions.num import (
     sql_dround,
 )
 from sdp_spark.operators.insights import _BIGRAM_SQL, _bigrams
+from sdp_spark.memo import scratch
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import table
 
@@ -509,9 +510,9 @@ def _knn_scored_arrow(spark: SparkSession, sf_dir: str, a: DataFrame) -> DataFra
     temp parquet by the EXECUTORS (one small job — never a driver collect;
     the bounded-driver-state audit stays clean) and loaded once per task
     inside the mapInArrow function — the guide §8 "co-locate instead of
-    join" idiom. Nothing persists across invocations: every call rewrites
-    the side file from the live frame, so each bench rep / oracle run still
-    computes from the parquet inputs.
+    join" idiom. Every call rewrites the side file from the live frame, so
+    each bench rep / oracle run still computes from the parquet inputs; the
+    side dir is a memo.scratch dir, removed by release.
 
     Bit-exactness: per query row the dot is accumulated dimension-by-
     dimension into an acc column initialized 0.0 — ((0.0 + t0) + t1) + …,
@@ -526,11 +527,9 @@ def _knn_scored_arrow(spark: SparkSession, sf_dir: str, a: DataFrame) -> DataFra
     bound that makes an exact O(N²) graph feasible at all (the 100 TB path
     swaps the candidate generator, see llm_knn_graph docstring); the acc
     buffer is chunked to ~32 MB regardless of N."""
-    import tempfile
-
     from sdp_spark.operators.llm import _emb_normed
 
-    side = tempfile.mkdtemp(prefix="sdp_knn_cands_")
+    side = scratch(spark, sf_dir, "sdp_knn_cands_")
     (
         _emb_normed(spark, sf_dir)
         .select("vec_id", "label", "dvec", "norm")
@@ -576,7 +575,10 @@ def _knn_scored_arrow(spark: SparkSession, sf_dir: str, a: DataFrame) -> DataFra
             qv_all = _np.asarray(
                 b.column("dvec").flatten(), dtype=_np.float64
             ).reshape(m_all, -1)
-            assert qv_all.shape[1] == dim
+            if qv_all.shape[1] != dim:
+                raise ValueError(
+                    f"query vectors have dim {qv_all.shape[1]}, candidates {dim}"
+                )
             for s in range(0, m_all, chunk):
                 qid = qid_all[s : s + chunk]
                 qn = qn_all[s : s + chunk]

@@ -22,6 +22,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sdp_spark.memo import memo, stamp
+
 TABLES = (
     "region",
     "nation",
@@ -66,8 +68,8 @@ def _pin_session_confs(spark: SparkSession) -> None:
 
 
 def table_fingerprint(sf_dir: str, name: str) -> tuple[int, int]:
-    """(mtime_ns, size) of the table's parquet path — the staleness stamp
-    every per-(app, sf_dir) memo must carry in its key. A Spark overwrite
+    """(mtime_ns, size) of the table's parquet path — one table's share of
+    the data version every memo key carries (memo.stamp). A Spark overwrite
     deletes and recreates the directory (or file), so the mtime moves on
     ANY rewrite; a memo keyed without it would keep serving the old file
     list after a test (or a caller) rewrites a table in place — the exact
@@ -95,15 +97,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     broken by event_id in every consumer.
     """
     _pin_session_confs(spark)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-        table_fingerprint(sf_dir, name),
-    )
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return _scan(spark, sf_dir, name)
+
+
+@memo
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The analyzed scan behind `table`, memoized. A bare
+    `spark.read.parquet` costs ~0.1 s per call on this box (file listing +
+    footer/schema read, all driver-side), and `load_tables` paid it 10x
+    plus 10 temp-view re-registrations on EVERY `_sql`-based operator
+    invocation (~1.4 s/rep measured — more than most queries themselves;
+    guide §1.2 "don't compute things you throw away", applied to the
+    driver). Logical plans are immutable, so handing every caller the same
+    DataFrame changes nothing about results; the data version in the memo
+    key retires an entry the moment a table is rewritten. This memoizes
+    PLAN OBJECTS only — no data, no results, nothing persisted across
+    runs."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -115,36 +124,22 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
         elif isinstance(ts_t, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_CACHE[key] = df
-    return df
+        return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# (applicationId, abs sf_dir, name, fingerprint) -> analyzed scan
-# DataFrame. A bare `spark.read.parquet` costs ~0.1 s per call on this box
-# (file listing + footer/schema read, all driver-side), and `load_tables`
-# paid it 10x plus 10 temp-view re-registrations on EVERY `_sql`-based
-# operator invocation (~1.4 s/rep measured — more than most queries
-# themselves; guide §1.2 "don't compute things you throw away", applied to
-# the driver). Logical plans are immutable, so handing every caller the
-# same DataFrame changes nothing about results; the fingerprint in the key
-# (see table_fingerprint) retires an entry the moment the underlying file
-# is rewritten. This memoizes PLAN OBJECTS only — no data, no results,
-# nothing persisted across runs.
-_TABLE_CACHE: dict[tuple[str, str, str, tuple[int, int]], DataFrame] = {}
-
-# applicationId -> (abs sf_dir, fingerprints) whose views are currently
+# applicationId -> (abs sf_dir, data version) whose views are currently
 # registered; re-registration is skipped only when the SAME dir with the
 # SAME file fingerprints is already live, so a session that alternates sf
 # dirs or rewrites a table in place (tests do both) stays correct.
 _VIEWS_REGISTERED: dict[str, tuple[str, tuple]] = {}
 
 
-# (applicationId, sf_dir, name, fingerprint) -> scan partition count,
-# memoized so the wide_table parallelism probe lists files once per
-# session (per file version), not per call.
-_SCAN_PARTS: dict[tuple[str, str, str, tuple[int, int]], int] = {}
+@memo
+def _scan_parts(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Scan partition count, so the wide_table parallelism probe lists
+    files once per session and data version, not per call."""
+    return table(spark, sf_dir, name).rdd.getNumPartitions()
 
 
 def wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -160,16 +155,8 @@ def wide_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the condition is false and this is `table()` verbatim: no extra
     exchange, pushdown/pruning untouched."""
     df = table(spark, sf_dir, name)
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        name,
-        table_fingerprint(sf_dir, name),
-    )
-    if key not in _SCAN_PARTS:
-        _SCAN_PARTS[key] = df.rdd.getNumPartitions()
     target = spark.sparkContext.defaultParallelism
-    if _SCAN_PARTS[key] < target:
+    if _scan_parts(spark, sf_dir, name) < target:
         df = df.repartition(target)
     return df
 
@@ -183,21 +170,23 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     of every `spark.sql`-based operator."""
     out: dict[str, DataFrame] = {name: table(spark, sf_dir, name) for name in TABLES}
     app = spark.sparkContext.applicationId
-    norm = os.path.abspath(sf_dir)
-    stamp = (norm, tuple(table_fingerprint(sf_dir, name) for name in TABLES))
-    if _VIEWS_REGISTERED.get(app) != stamp:
+    live = (os.path.abspath(sf_dir), stamp(sf_dir))
+    if _VIEWS_REGISTERED.get(app) != live:
         for name, df in out.items():
             df.createOrReplaceTempView(name)
-        _VIEWS_REGISTERED[app] = stamp
+        _VIEWS_REGISTERED[app] = live
     return out
 
 
 def cache_tag(sf_dir: str) -> str:
-    """Stable identifier for an sf_dir: basename + hash of the NORMALIZED
-    absolute path (trailing slashes / relative spellings map to one tag;
-    distinct dirs sharing a basename never collide)."""
+    """Stable identifier for an sf_dir's data: basename + hash of the
+    NORMALIZED absolute path and the data version (trailing slashes /
+    relative spellings map to one tag; distinct dirs sharing a basename
+    never collide; a table rewritten in place moves every staged artifact
+    derived from the dir to a fresh path)."""
     norm = os.path.abspath(sf_dir.rstrip("/") or "/")
-    return os.path.basename(norm) + "-" + hashlib.md5(norm.encode()).hexdigest()[:8]
+    digest = hashlib.md5(repr((norm, stamp(sf_dir))).encode()).hexdigest()[:8]
+    return os.path.basename(norm) + "-" + digest
 
 
 def cache_dir(sf_dir: str, *parts: str) -> str:

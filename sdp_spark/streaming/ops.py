@@ -23,34 +23,22 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sdp_spark.functions.num import DEC
+from sdp_spark.memo import memo, memory_sink, scratch
 from sdp_spark.plans.registry import register
 from sdp_spark.sources.fixtures import cache_dir, table
 
 _SEC = "2.10 streaming"
 
-_counter_lock = threading.Lock()
-_counter = [0]
-
-
-def _next_name(prefix: str) -> str:
-    with _counter_lock:
-        _counter[0] += 1
-        return f"{prefix}_{_counter[0]}"
-
-
-_LANDING: dict[str, str] = {}
-
 _N_LANDING_FILES = 4
 
 
+@memo
 def _events_landing_dir(spark: SparkSession, sf_dir: str) -> str:
     """File-stream sources need a *directory* to watch; stage the events
     parquet into a per-sf landing dir once (the 'continuously arriving
@@ -61,55 +49,53 @@ def _events_landing_dir(spark: SparkSession, sf_dir: str) -> str:
     incremental result stays equal to the batch query (the property the SQL
     oracles pin). Built into a temp dir + atomic rename: a concurrent
     process never streams a half-built landing dir."""
-    if sf_dir not in _LANDING:
-        # landing5: key bumped when the on-disk ts schema changed from INT64
-        # nano-long to TIMESTAMP_NTZ(µs) — a warm landing4 dir built by
-        # pre-change code would fail the new explicit NTZ stream schema
-        out = cache_dir(sf_dir, "events_landing5")
-        if not os.path.isdir(out):
-            tmp = f"{out}.tmp.{os.getpid()}"
-            # Normalize ts to TIMESTAMP_NTZ(µs) in the landing files so the
-            # stream-side schema is engine-independent. Spark 4 reads the
-            # fixture's TIMESTAMP(NANOS) natively as ntz (the legacy
-            # nanosAsLong conf is a no-op there); older engines need the
-            # long-ns fallback. Session tz is pinned UTC by table(), so an
-            # ltz->ntz cast preserves wall-clock.
-            src = table(spark, sf_dir, "events")
-            ts_t = src.schema["ts"].dataType
-            if isinstance(ts_t, T.TimestampType):
-                src = src.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-            from pyspark.sql import Window
+    # landing5: key bumped when the on-disk ts schema changed from INT64
+    # nano-long to TIMESTAMP_NTZ(µs) — a warm landing4 dir built by
+    # pre-change code would fail the new explicit NTZ stream schema
+    out = cache_dir(sf_dir, "events_landing5")
+    if not os.path.isdir(out):
+        tmp = f"{out}.tmp.{os.getpid()}"
+        # Normalize ts to TIMESTAMP_NTZ(µs) in the landing files so the
+        # stream-side schema is engine-independent. Spark 4 reads the
+        # fixture's TIMESTAMP(NANOS) natively as ntz (the legacy
+        # nanosAsLong conf is a no-op there); older engines need the
+        # long-ns fallback. Session tz is pinned UTC by table(), so an
+        # ltz->ntz cast preserves wall-clock.
+        src = table(spark, sf_dir, "events")
+        ts_t = src.schema["ts"].dataType
+        if isinstance(ts_t, T.TimestampType):
+            src = src.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        from pyspark.sql import Window
 
-            sliced = src.withColumn(
-                "_slice",
-                F.ntile(_N_LANDING_FILES).over(
-                    Window.orderBy("ts", "event_id")
-                ),
+        sliced = src.withColumn(
+            "_slice",
+            F.ntile(_N_LANDING_FILES).over(
+                Window.orderBy("ts", "event_id")
+            ),
+        )
+        base = 1_600_000_000  # fixed epoch: mtime order == slice order
+        for i in range(1, _N_LANDING_FILES + 1):
+            stage = os.path.join(tmp, f"_stage_{i}")
+            (
+                sliced.filter(F.col("_slice") == i)
+                .drop("_slice")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
             )
-            base = 1_600_000_000  # fixed epoch: mtime order == slice order
-            for i in range(1, _N_LANDING_FILES + 1):
-                stage = os.path.join(tmp, f"_stage_{i}")
-                (
-                    sliced.filter(F.col("_slice") == i)
-                    .drop("_slice")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                part = next(
-                    p for p in os.listdir(stage)
-                    if p.endswith(".parquet") and not p.startswith((".", "_"))
-                )
-                dst = os.path.join(tmp, f"events_{i:03d}.parquet")
-                os.replace(os.path.join(stage, part), dst)
-                shutil.rmtree(stage, ignore_errors=True)
-                os.utime(dst, (base + i, base + i))
-            try:
-                os.rename(tmp, out)
-            except OSError:  # lost the build race: another process landed it
-                shutil.rmtree(tmp, ignore_errors=True)
-        _LANDING[sf_dir] = out
-    return _LANDING[sf_dir]
+            part = next(
+                p for p in os.listdir(stage)
+                if p.endswith(".parquet") and not p.startswith((".", "_"))
+            )
+            dst = os.path.join(tmp, f"events_{i:03d}.parquet")
+            os.replace(os.path.join(stage, part), dst)
+            shutil.rmtree(stage, ignore_errors=True)
+            os.utime(dst, (base + i, base + i))
+        try:
+            os.rename(tmp, out)
+        except OSError:  # lost the build race: another process landed it
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,19 +144,13 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STREAM_SHUFFLE = os.environ.get("SDP_STREAM_SHUFFLE", "8")
 
 
-def _run_to_memory(sdf: DataFrame, mode: str, prefix: str) -> DataFrame:
-    name = _next_name(prefix)
+def _run_to_memory(sdf: DataFrame, sf_dir: str, mode: str, prefix: str) -> DataFrame:
+    writer, name = memory_sink(sdf, sf_dir, prefix)
     spark = sdf.sparkSession
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE)
     try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.outputMode(mode).trigger(availableNow=True).start()
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prior)
@@ -195,7 +175,7 @@ def stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("value", 6).alias("value_r"),
         F.date_format(F.date_trunc("second", "ts"), "yyyy-MM-dd HH:mm:ss").alias("ts_s"),
     )
-    return _run_to_memory(sdf, "append", "ingest")
+    return _run_to_memory(sdf, sf_dir, "append", "ingest")
 
 
 @register(
@@ -221,7 +201,7 @@ def source_stream_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sdf = spark.readStream.schema(schema).json(path)
     agg = sdf.groupBy("event_type").agg(F.count("*").alias("n"))
-    return _run_to_memory(agg, "complete", "src_files")
+    return _run_to_memory(agg, sf_dir, "complete", "src_files")
 
 
 @register(
@@ -235,7 +215,7 @@ def sink_stream_foreachBatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """stream → relational store via foreachBatch (the DB-as-sink role the
     reference deploys). Idempotence discipline: overwrite by batchId
     partition so redelivered batches replace, not duplicate."""
-    out = tempfile.mkdtemp(prefix="sdp_stream_sink_")
+    out = scratch(spark, sf_dir, "sdp_stream_sink_")
     sdf = _events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
@@ -339,7 +319,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "complete", "tumbling")
+    return _run_to_memory(agg, sf_dir, "complete", "tumbling")
 
 
 @register(
@@ -372,7 +352,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "complete", "sliding")
+    return _run_to_memory(agg, sf_dir, "complete", "sliding")
 
 
 @register(
@@ -418,7 +398,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "complete", "session")
+    return _run_to_memory(agg, sf_dir, "complete", "session")
 
 
 @register(
@@ -461,7 +441,7 @@ def stream_tumbling_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "append", "tumbling_wm")
+    return _run_to_memory(agg, sf_dir, "append", "tumbling_wm")
 
 
 @register(
@@ -504,7 +484,7 @@ def stream_sliding_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "append", "sliding_wm")
+    return _run_to_memory(agg, sf_dir, "append", "sliding_wm")
 
 
 @register(
@@ -558,7 +538,7 @@ def stream_session_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    return _run_to_memory(agg, "append", "session_wm")
+    return _run_to_memory(agg, sf_dir, "append", "session_wm")
 
 
 @register(
@@ -591,7 +571,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return _run_to_memory(agg, "append", "watermark")
+    return _run_to_memory(agg, sf_dir, "append", "watermark")
 
 
 @register(
@@ -613,7 +593,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_id", "ts"])
         .select("event_id", "user_id", "event_type")
     )
-    return _run_to_memory(deduped, "append", "dedup")
+    return _run_to_memory(deduped, sf_dir, "append", "dedup")
 
 
 @register(
@@ -661,7 +641,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = sdf.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    emitted = _run_to_memory(result, "update", "stateful")
+    emitted = _run_to_memory(result, sf_dir, "update", "stateful")
     # update-mode memory sink APPENDS one emission per (batch, active user);
     # with the multi-batch landing dir a user emits up to once per batch.
     # n_events is strictly increasing per user, so the final state is the
@@ -692,7 +672,7 @@ def stream_join_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = sdf.join(dim, sdf.user_id == dim.c_custkey).select(
         "event_id", "user_id", "c_mktsegment", "c_name"
     )
-    return _run_to_memory(joined, "append", "join_dim")
+    return _run_to_memory(joined, sf_dir, "append", "join_dim")
 
 
 @register(
@@ -739,7 +719,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "p_user = v_user AND v_ts >= p_ts - INTERVAL 1 HOUR AND v_ts <= p_ts"
         ),
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-    return _run_to_memory(joined, "append", "ss_join")
+    return _run_to_memory(joined, sf_dir, "append", "ss_join")
 
 
 @register(
@@ -803,7 +783,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "left_outer",
     ).select("purchase_id", "view_id", F.col("p_user").alias("user_id"))
-    return _run_to_memory(joined, "append", "ss_join_outer")
+    return _run_to_memory(joined, sf_dir, "append", "ss_join_outer")
 
 
 @register(
@@ -827,7 +807,7 @@ def sink_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     once. At scale the versioned rewrite becomes a lakehouse MERGE
     (Delta/Iceberg) or partition-scoped overwrite keyed on the upsert
     key's partition."""
-    base = tempfile.mkdtemp(prefix="sdp_stream_upsert_")
+    base = scratch(spark, sf_dir, "sdp_stream_upsert_")
     sdf = _events_stream(spark, sf_dir).select("user_id", "event_type")
     state = {"last": -1}
 
@@ -851,9 +831,7 @@ def sink_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{base}/v{state['last'] % 2}")
 
 
-_LANDING_OOO: dict[str, str] = {}
-
-
+@memo
 def _events_landing_ooo(spark: SparkSession, sf_dir: str) -> str:
     """OUT-OF-ORDER landing dir: 4 slices by user_id % 4, each spanning the
     FULL time range (unlike the chronological dir, whose file order keeps
@@ -861,38 +839,36 @@ def _events_landing_ooo(spark: SparkSession, sf_dir: str) -> str:
     micro-batch's max event time minus the delay, later files' early events
     arrive LATE — the adversarial input that makes watermark drop/eviction
     behavior observable instead of vacuous."""
-    if sf_dir not in _LANDING_OOO:
-        out = cache_dir(sf_dir, "events_landing_ooo1")
-        if not os.path.isdir(out):
-            tmp = f"{out}.tmp.{os.getpid()}"
-            src = table(spark, sf_dir, "events")
-            ts_t = src.schema["ts"].dataType
-            if isinstance(ts_t, T.TimestampType):
-                src = src.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-            base = 1_600_000_000
-            os.makedirs(tmp, exist_ok=True)
-            for i in range(4):
-                stage = os.path.join(tmp, f"_stage_{i}")
-                (
-                    src.filter(F.col("user_id") % 4 == i)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                part = next(
-                    p for p in os.listdir(stage)
-                    if p.endswith(".parquet") and not p.startswith((".", "_"))
-                )
-                dst = os.path.join(tmp, f"events_{i:03d}.parquet")
-                os.replace(os.path.join(stage, part), dst)
-                shutil.rmtree(stage, ignore_errors=True)
-                os.utime(dst, (base + i, base + i))
-            try:
-                os.rename(tmp, out)
-            except OSError:  # lost the build race
-                shutil.rmtree(tmp, ignore_errors=True)
-        _LANDING_OOO[sf_dir] = out
-    return _LANDING_OOO[sf_dir]
+    out = cache_dir(sf_dir, "events_landing_ooo1")
+    if not os.path.isdir(out):
+        tmp = f"{out}.tmp.{os.getpid()}"
+        src = table(spark, sf_dir, "events")
+        ts_t = src.schema["ts"].dataType
+        if isinstance(ts_t, T.TimestampType):
+            src = src.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        base = 1_600_000_000
+        os.makedirs(tmp, exist_ok=True)
+        for i in range(4):
+            stage = os.path.join(tmp, f"_stage_{i}")
+            (
+                src.filter(F.col("user_id") % 4 == i)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
+            )
+            part = next(
+                p for p in os.listdir(stage)
+                if p.endswith(".parquet") and not p.startswith((".", "_"))
+            )
+            dst = os.path.join(tmp, f"events_{i:03d}.parquet")
+            os.replace(os.path.join(stage, part), dst)
+            shutil.rmtree(stage, ignore_errors=True)
+            os.utime(dst, (base + i, base + i))
+        try:
+            os.rename(tmp, out)
+        except OSError:  # lost the build race
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 @register("stream_late_metrics", oracle=None, section=_SEC)
@@ -942,17 +918,11 @@ def stream_late_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import json
 
-    name = _next_name("late_metrics")
+    writer, name = memory_sink(agg, sf_dir, "late_metrics")
     prior = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", _STREAM_SHUFFLE)
     try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.outputMode("append").trigger(availableNow=True).start()
         q.awaitTermination()
         rows_in = 0
         state_rows_final = 0
@@ -1036,7 +1006,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return _run_to_memory(agg, "complete", "ohlc")
+    return _run_to_memory(agg, sf_dir, "complete", "ohlc")
 
 
 @register(
@@ -1163,7 +1133,7 @@ def stream_stateful_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = sdf.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
-    return _run_to_memory(result, "append", "stateful_timeout")
+    return _run_to_memory(result, sf_dir, "append", "stateful_timeout")
 
 
 @register(
@@ -1207,7 +1177,7 @@ def stream_topk_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    snap = _run_to_memory(agg, "complete", "topkwin")
+    snap = _run_to_memory(agg, sf_dir, "complete", "topkwin")
     w = Window.partitionBy("win_start").orderBy(F.col("n").desc(), F.col("event_type"))
     return (
         snap.withColumn("rk", F.row_number().over(w).cast("bigint"))
@@ -1242,7 +1212,7 @@ def stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_to_memory(agg, "complete", "approxdistinct")
+    return _run_to_memory(agg, sf_dir, "complete", "approxdistinct")
 
 
 from sdp_spark.operators.analytics import _EARS_Z as _EARS_Z_SHARED  # noqa: E402
@@ -1280,7 +1250,7 @@ def stream_ears_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(F.count("*").alias("n"))
     )
-    snap = _run_to_memory(daily, "complete", "earsdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "earsdaily")
     return (
         ears_c2_scored(snap)
         .filter(F.col("c2_score") > _EARS_Z)
@@ -1321,7 +1291,7 @@ def stream_ears_family_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(F.count("*").alias("n"))
     )
-    snap = _run_to_memory(daily, "complete", "earsfamdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "earsfamdaily")
     return (
         ears_family_scored(snap)
         .filter(F.col("score") > _EARS_Z)
@@ -1361,7 +1331,7 @@ def stream_epidemic_onset(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.groupBy("event_type", F.date_trunc("day", "ts").alias("d"))
         .agg(F.count("*").cast("double").alias("c"))
     )
-    snap = _run_to_memory(daily, "complete", "onsetdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "onsetdaily")
     return epidemic_onset_rollup(serfling_scored(snap))
 
 
@@ -1390,7 +1360,7 @@ def stream_excess_burden(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.groupBy("event_type", F.date_trunc("day", "ts").alias("d"))
         .agg(F.count("*").cast("double").alias("c"))
     )
-    snap = _run_to_memory(daily, "complete", "excessdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "excessdaily")
     return excess_burden_rollup(serfling_scored(snap))
 
 
@@ -1420,7 +1390,7 @@ def sink_stream_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "user_id",
     )
-    out = tempfile.mkdtemp(prefix="sdp_stream_parted_")
+    out = scratch(spark, sf_dir, "sdp_stream_parted_")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
         df.write.mode("append").partitionBy("day").parquet(out)
@@ -1508,7 +1478,7 @@ def stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    return _run_to_memory(deduped, "append", "dedupwm")
+    return _run_to_memory(deduped, sf_dir, "append", "dedupwm")
 
 
 @register(
@@ -1543,7 +1513,7 @@ def stream_matview_upkeep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is |users| rows — the view, not the stream; at 100 TB
     the merge join co-partitions on the view key and overwrites touched
     partitions only (the batch matview's scale note applies verbatim)."""
-    out = tempfile.mkdtemp(prefix="sdp_stream_mv_")
+    out = scratch(spark, sf_dir, "sdp_stream_mv_")
 
     # Crash-safe state fold (ADVICE r6): every fold writes a NEW versioned
     # dir (state_v{batch_id}) and readers pick the highest version whose
@@ -1645,7 +1615,7 @@ def stream_cusum_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = sdf.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.count("*").cast("double").alias("c"))
-    snap = _run_to_memory(daily, "complete", "cusumdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "cusumdaily")
     return (
         cusum_scored(snap)
         .filter(F.col("alert"))
@@ -1686,7 +1656,7 @@ def stream_ewma_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = sdf.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.count("*").cast("double").alias("c"))
-    snap = _run_to_memory(daily, "complete", "ewmadaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "ewmadaily")
     return (
         ewma_scored(snap)
         .filter(F.col("alert"))
@@ -1729,7 +1699,7 @@ def stream_rt_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("day"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    snap = _run_to_memory(daily, "complete", "rtdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "rtdaily")
     return (
         rt_scored(snap)
         .filter(F.col("rt") > RT_ALERT)
@@ -1811,7 +1781,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("bucket"),
     )
     counts = bucketed.groupBy("d", "bucket").agg(F.count("*").alias("n"))
-    snap = _run_to_memory(counts, "complete", "driftpsi")
+    snap = _run_to_memory(counts, sf_dir, "complete", "driftpsi")
 
     split = F.lit(_PSI_EV_SPLIT).cast("timestamp")
     ref = (
@@ -1908,7 +1878,7 @@ def stream_histlimits_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         sdf.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(F.count("*").cast("bigint").alias("n"))
     )
-    snap = _run_to_memory(daily, "complete", "histlimdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "histlimdaily")
     return (
         histlimits_scored(snap)
         .filter(F.col("hl_score") > _HL_Z)
@@ -1951,7 +1921,7 @@ def stream_serfling_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = sdf.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.count("*").cast("double").alias("c"))
-    snap = _run_to_memory(daily, "complete", "serfdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "serfdaily")
     return (
         serfling_scored(snap)
         .filter(F.col("alert"))
@@ -1995,7 +1965,7 @@ def stream_farrington_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = sdf.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("d")
     ).agg(F.count("*").cast("double").alias("c"))
-    snap = _run_to_memory(daily, "complete", "farrdaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "farrdaily")
     return (
         farrington_scored(snap)
         .filter(F.col("alert"))
@@ -2052,7 +2022,7 @@ def stream_nowcast_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
             % _NC_DMAX
         ).alias("delay"),
     ).agg(F.count("*").alias("n"))
-    snap = _run_to_memory(counts, "complete", "nowcastcnt")
+    snap = _run_to_memory(counts, sf_dir, "complete", "nowcastcnt")
     return (
         nowcast_scored(snap)
         .filter(F.col("completeness") < 1.0)
@@ -2119,7 +2089,7 @@ def stream_spacetime_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", "ts"), F.lit(_ST_EPOCH).cast("date")
         ).alias("t"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    snap = _run_to_memory(counts, "complete", "stscancnt")
+    snap = _run_to_memory(counts, sf_dir, "complete", "stscancnt")
     return (
         spacetime_scored(snap)
         .filter(F.col("llr") > 0.0)
@@ -2164,7 +2134,7 @@ def stream_rt_cori_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("day"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    snap = _run_to_memory(daily, "complete", "rtcoridaily")
+    snap = _run_to_memory(daily, sf_dir, "complete", "rtcoridaily")
     return (
         rt_cori_scored(snap)
         .filter(F.col("trend") == "growing")
@@ -2267,7 +2237,7 @@ def stream_linkage_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_SLK_B_NAME).alias("b_name"),
         F.expr(_SLK_B_PHONE).alias("b_phone"),
     )
-    snap = _run_to_memory(reports, "append", "linkinc")
+    snap = _run_to_memory(reports, sf_dir, "append", "linkinc")
     m = F.broadcast(
         table(spark, sf_dir, "customer").select(
             F.col("c_custkey").alias("a_key"),
@@ -2446,9 +2416,7 @@ def stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CDC replication stream (r14) — the 15th batch+stream pair
 # ---------------------------------------------------------------------------
 
-_CDC_LANDING: dict[str, str] = {}
-
-
+@memo
 def _cdc_landing_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the synthetic replication log (scans.cdc_log) into 4
     CHRONOLOGICAL parquet slices by lsn quartile — binlog segments in
@@ -2457,58 +2425,56 @@ def _cdc_landing_dir(spark: SparkSession, sf_dir: str) -> str:
     the landing-dir discipline)."""
     from sdp_spark.operators.scans import cdc_log
 
-    if sf_dir not in _CDC_LANDING:
-        out = cache_dir(sf_dir, "cdc_landing2")
-        if not os.path.isdir(out):
-            tmp = f"{out}.tmp.{os.getpid()}"
-            log = cdc_log(spark, sf_dir)
-            # RANGE-slice on o_orderkey (lsn = 3k+{0,1,2} is monotone in
-            # it, so key ranges ARE lsn ranges): parallel map-side
-            # bucketing from a 1-row min/max agg — the first cut used
-            # ntile over a global single-partition sort, the one
-            # anti-scale pattern in the chain (20.6M rows through one
-            # task at the 100x fixture)
-            mn, mx = log.agg(
-                F.min("o_orderkey"), F.max("o_orderkey")
-            ).first()
-            span = int(mx) - int(mn) + 1
-            sliced = log.withColumn(
-                "slice",
-                F.least(
-                    F.lit(4),
-                    F.floor(
-                        (F.col("o_orderkey") - F.lit(int(mn)))
-                        * 4
-                        / F.lit(span)
-                    ).cast("int")
-                    + 1,
-                ),
+    out = cache_dir(sf_dir, "cdc_landing2")
+    if not os.path.isdir(out):
+        tmp = f"{out}.tmp.{os.getpid()}"
+        log = cdc_log(spark, sf_dir)
+        # RANGE-slice on o_orderkey (lsn = 3k+{0,1,2} is monotone in
+        # it, so key ranges ARE lsn ranges): parallel map-side
+        # bucketing from a 1-row min/max agg — the first cut used
+        # ntile over a global single-partition sort, the one
+        # anti-scale pattern in the chain (20.6M rows through one
+        # task at the 100x fixture)
+        mn, mx = log.agg(
+            F.min("o_orderkey"), F.max("o_orderkey")
+        ).first()
+        span = int(mx) - int(mn) + 1
+        sliced = log.withColumn(
+            "slice",
+            F.least(
+                F.lit(4),
+                F.floor(
+                    (F.col("o_orderkey") - F.lit(int(mn)))
+                    * 4
+                    / F.lit(span)
+                ).cast("int")
+                + 1,
+            ),
+        )
+        base = 1_600_000_000
+        os.makedirs(tmp, exist_ok=True)
+        for i in range(4):
+            stage = os.path.join(tmp, f"_stage_{i}")
+            (
+                sliced.filter(F.col("slice") == i + 1)
+                .drop("slice")
+                .coalesce(1)
+                .write.mode("overwrite")
+                .parquet(stage)
             )
-            base = 1_600_000_000
-            os.makedirs(tmp, exist_ok=True)
-            for i in range(4):
-                stage = os.path.join(tmp, f"_stage_{i}")
-                (
-                    sliced.filter(F.col("slice") == i + 1)
-                    .drop("slice")
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(stage)
-                )
-                part = next(
-                    p for p in os.listdir(stage)
-                    if p.endswith(".parquet") and not p.startswith((".", "_"))
-                )
-                dst = os.path.join(tmp, f"binlog_{i:03d}.parquet")
-                os.replace(os.path.join(stage, part), dst)
-                shutil.rmtree(stage, ignore_errors=True)
-                os.utime(dst, (base + i, base + i))
-            try:
-                os.rename(tmp, out)
-            except OSError:  # lost the build race
-                shutil.rmtree(tmp, ignore_errors=True)
-        _CDC_LANDING[sf_dir] = out
-    return _CDC_LANDING[sf_dir]
+            part = next(
+                p for p in os.listdir(stage)
+                if p.endswith(".parquet") and not p.startswith((".", "_"))
+            )
+            dst = os.path.join(tmp, f"binlog_{i:03d}.parquet")
+            os.replace(os.path.join(stage, part), dst)
+            shutil.rmtree(stage, ignore_errors=True)
+            os.utime(dst, (base + i, base + i))
+        try:
+            os.rename(tmp, out)
+        except OSError:  # lost the build race
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
 
 
 @register(
@@ -2536,7 +2502,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sdp_spark.operators.scans import cdc_final_agg
 
     landing = _cdc_landing_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="sdp_stream_cdc_")
+    base = scratch(spark, sf_dir, "sdp_stream_cdc_")
     q = (
         _cdc_source(spark, landing)
         .writeStream.foreachBatch(_cdc_apply_batch_fn(base))

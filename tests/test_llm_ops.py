@@ -124,11 +124,12 @@ def test_ngram_collapse_equals_uncollapsed(spark, sf_dir):
         }
 
 
-def test_resolve_collapse_equals_uncollapsed(spark):
+def test_resolve_collapse_equals_uncollapsed(spark, monkeypatch):
     """Keeper resolution must be branch-invariant: forcing the density gate
     dense vs sparse at sf0.1 must produce the identical (doc_id, keeper_doc,
     cluster_size, is_keeper) set. Covers the rep-graph propagation +
     member-projection rewrite (round 6)."""
+    from sdp_spark import memo
     from sdp_spark.operators import llm
 
     sf = "/root/testdata/sf0.1"
@@ -136,17 +137,16 @@ def test_resolve_collapse_equals_uncollapsed(spark):
         pytest.skip("sf0.1 fixture absent")
 
     def run(force_dense):
-        key = (spark.sparkContext.applicationId, sf)
-        llm._COLLAPSE_DECISION[key] = force_dense
-        llm._RESOLVE_CACHE.pop(key, None)
+        monkeypatch.setattr(llm, "_collapse_dense", lambda spark, sf_dir: force_dense)
+        memo.release(sf)  # drop the memoized labels of the other branch
         try:
             return {
                 tuple(r)
                 for r in REGISTRY["llm_dedup_near_resolve"].fn(spark, sf).collect()
             }
         finally:
-            llm._COLLAPSE_DECISION.pop(key, None)
-            llm._RESOLVE_CACHE.pop(key, None)
+            monkeypatch.undo()
+            memo.release(sf)
 
     sparse, dense = run(False), run(True)
     assert dense == sparse, {
@@ -169,9 +169,12 @@ def test_unpersist_all_releases_and_rebuilds(spark, sf_dir):
     from sdp_spark.operators import llm
 
     before = _pairs(REGISTRY["llm_dedup_near"].fn(spark, sf_dir))
-    assert llm._SIG_CACHE, "expected the signature cache to be populated"
+    sig, sh = llm._cached_signatures(spark, sf_dir), llm._cached_shingles(spark, sf_dir)
+    assert sig is llm._cached_signatures(spark, sf_dir), "expected the signature memo to be populated"
+    assert sig.is_cached and sh.is_cached
     assert sdp_spark.unpersist_all() > 0
-    assert not llm._SH_CACHE and not llm._SIG_CACHE
+    assert llm._cached_signatures(spark, sf_dir) is not sig
+    assert llm._cached_shingles(spark, sf_dir) is not sh
     assert _pairs(REGISTRY["llm_dedup_near"].fn(spark, sf_dir)) == before
 
 
@@ -751,11 +754,12 @@ def test_pca_fit_invariants_and_projection(spark, sf_dir):
     deterministic run-to-run (cache cleared between fits)."""
     import numpy as np
 
-    from sdp_spark.operators.corpus import _PCA_CACHE, _pca_fit
+    from sdp_spark.memo import release
+    from sdp_spark.operators.corpus import _pca_fit
 
-    _PCA_CACHE.clear()
+    release(sf_dir)
     mean1, comps1, evr1 = _pca_fit(spark, sf_dir)
-    _PCA_CACHE.clear()
+    release(sf_dir)
     mean2, comps2, evr2 = _pca_fit(spark, sf_dir)
     assert np.allclose(mean1, mean2) and np.allclose(comps1, comps2)
 
@@ -836,13 +840,14 @@ def test_kmeans_distributed_fit_matches_driver_fit(spark, sf_dir, monkeypatch):
     import numpy as np
 
     import sdp_spark.operators.llm as llm
+    from sdp_spark.memo import release
 
-    llm._KM_CACHE.clear()
+    release(sf_dir)
     driver_cents = llm._kmeans_fit(spark, sf_dir)
-    llm._KM_CACHE.clear()
+    release(sf_dir)
     monkeypatch.setattr(llm, "_KM_FIT_SAMPLE", 0)  # force distributed path
     dist_cents = llm._kmeans_fit(spark, sf_dir)
-    llm._KM_CACHE.clear()
+    release(sf_dir)
     assert len(driver_cents) == len(dist_cents)
     assert np.allclose(
         np.array(driver_cents), np.array(dist_cents), rtol=1e-9, atol=1e-12

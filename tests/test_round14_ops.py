@@ -73,21 +73,16 @@ def test_ann_force_rebuild_evicts_memos(spark, sf_dir):
     # force the first build too: a session-cached manifest would
     # short-circuit a plain build and never populate the memos
     L.ann_index_build(spark, sf_dir, force=True)
-    app = spark.sparkContext.applicationId
-    before = {
-        k: v for k, v in L._KNN_EDGES_CACHE.items()
-        if k[0] == app and k[1] == sf_dir
-    }
-    sph_before = {
-        k: v for k, v in L._SPH_CACHE.items()
-        if k[0] == app and k[1] == sf_dir
-    }
-    assert before and sph_before  # the build populated them
+    k_cells = max(8, min(256, int(L._emb_count(spark, sf_dir) ** 0.5)))
+
+    def memos():
+        return L._ivf_knn_edges(spark, sf_dir), L._spherical_cells(spark, sf_dir, k_cells)
+
+    edges, cells = memos()
+    assert memos()[0] is edges and memos()[1] is cells  # populated: hits
     path = L.ann_index_build(spark, sf_dir, force=True)
-    for k, old in before.items():
-        assert L._KNN_EDGES_CACHE.get(k) is not old
-    for k, old in sph_before.items():
-        assert L._SPH_CACHE.get(k) is not old
+    assert memos()[0] is not edges
+    assert memos()[1] is not cells
     assert os.path.exists(os.path.join(path, "_MANIFEST.json"))
 
 

@@ -4,7 +4,7 @@ key-space remapping (primary/foreign keys shift together per replica, so
 join cardinalities scale linearly and keys stay unique; text/embedding
 payloads repeat, which only makes the dedup operators work HARDER).
 
-Usage: python tools/make_sf1.py [OUT_DIR] [REPLICAS]
+Usage: python tools/make_sf1.py [OUT_DIR] [REPLICAS]   (--help prints usage)
 Defaults: /tmp/sdp_sf1, 10. DuckDB does the replication (no JVM needed);
 output is one parquet file per table, same layout as /root/testdata/sf*.
 
@@ -16,8 +16,8 @@ results recorded in SCALING.md.
 
 from __future__ import annotations
 
+import argparse
 import os
-import sys
 
 import duckdb
 
@@ -70,9 +70,12 @@ SELECTS = {
 FIXED = ("region", "nation")
 
 
-def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sdp_sf1"
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("out", nargs="?", default="/tmp/sdp_sf1", help="output dir (default %(default)s)")
+    ap.add_argument("replicas", nargs="?", type=int, default=10, help="replica count (default %(default)s)")
+    args = ap.parse_args(argv)
+    out, reps = args.out, args.replicas
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     for tbl in (
